@@ -1455,26 +1455,17 @@ object DeletionVectors {
       mark: DataFrame => DataFrame,
       maintWaitMs: Long = 15L * 60 * 1000): Long = {
     requireWriterFeatures(spark, root)
-    val dbg = sys.env.contains("GRAFT_DV_DEBUG_TIMING")
-    var tMark = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[dv-delete] $tag: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     var firstPass = -1L
     var attempts = 0
     while (true) {
       attempts += 1
       require(attempts <= 10, "delete/purge conflict retries exhausted")
       val entries = liveEntries(spark, root)
-      lap("liveEntries")
       if (entries.isEmpty) return math.max(firstPass, 0L)
       val marked = mark(
           scanWithPos(spark, root, entries, currentMeta(spark, root)))
         .select(col("__file"), col("__pos"))
       val (nMarked, touched) = writeMarks(spark, root, marked, entries.size)
-      lap("mark+write job")
       if (firstPass < 0) firstPass = nMarked
       // nothing marked ⇒ nothing a racing rewrite could lose: no
       // fence needed (this also lets an insert-only upsert proceed
@@ -1483,10 +1474,8 @@ object DeletionVectors {
       // fence: wait out maintenance, then confirm nothing we marked
       // was concurrently replaced
       waitNoMaintenance(spark, root, maintWaitMs)
-      lap("fence wait")
       val liveNow = manifest(spark, root).select("file")
         .collect().map(_.getString(0)).toSet
-      lap("fence manifest recheck")
       if (touched.forall(liveNow.contains)) return firstPass
       // else: loop — the masked re-scan marks only the rows whose
       // tombstones went inert with their replaced files
@@ -1614,6 +1603,9 @@ object DeletionVectors {
       scope: Option[String] = None): Seq[String] = {
     claimMaintenance(spark, root)
     try {
+      // finish a crashed delete publish first: a hot file rewritten
+      // before its pending tombstones go live would keep their rows
+      DvBlobs.replayIntents(root): Unit
       import spark.implicits._
       var sigAttempts = 0
       var result: Seq[String] = null
@@ -1873,6 +1865,7 @@ object DeletionVectors {
         return Seq.empty
     } else claimMaintenance(spark, root)
     try {
+      DvBlobs.replayIntents(root): Unit // see purge
       val partCols = partitionColsOf(spark, root)
       require(partCols.nonEmpty,
         s"graft-dv table at $root has no recoverable partition layout")
@@ -2353,6 +2346,7 @@ object DeletionVectors {
       onBeforeCommit: () => Unit = () => ()): Seq[String] = {
     claimMaintenance(spark, root)
     try {
+      DvBlobs.replayIntents(root): Unit // see purge
       val partCols = partitionColsOf(spark, root)
       val meta = currentMeta(spark, root).getOrElse(
         throw new IllegalArgumentException(
@@ -2552,6 +2546,7 @@ object DeletionVectors {
       s"ZORDER BY takes 1 or 2 columns; got ${zCols.mkString(", ")}")
     claimMaintenance(spark, root)
     try {
+      DvBlobs.replayIntents(root): Unit // see purge
       val partCols = partitionColsOf(spark, root)
       require(partCols.nonEmpty,
         s"graft-dv table at $root has no recoverable partition layout")
@@ -2896,6 +2891,9 @@ object DeletionVectors {
     if (!Snapshots.tryExclusiveCreate(spark, maintMarker(root)))
       return (0L, 0L) // maintenance busy — the next batch retries
     try {
+      // replay before folding: a fold renames a crashed publish's only
+      // live blob, and the replay would then drop the intent unapplied
+      DvBlobs.replayIntents(root): Unit
       import spark.implicits._
       val dirs = DvBlobs.allFileDirs(root)
       if (dirs.isEmpty) (0L, 0L)
@@ -3910,6 +3908,7 @@ object DeletionVectors {
       minBlobs: Int = 2): (Long, Long) = {
     claimMaintenance(spark, root)
     try {
+      DvBlobs.replayIntents(root): Unit // see autoCompactBlobs
       import spark.implicits._
       val dirs = DvBlobs.allFileDirs(root)
       if (dirs.isEmpty) (0L, 0L)

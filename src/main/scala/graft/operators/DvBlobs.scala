@@ -202,7 +202,9 @@ object DvBlobs {
 
   /** Replay any crashed publish intents. Callers MUST hold the
     * table's maintenance claim (a live writer's in-flight intent must
-    * not be raced) — the DSv2 commit and vacuum both do.
+    * not be raced) — the DSv2 commit, vacuum, and every blob-folding
+    * or file-rewriting maintenance op do, each before it touches blobs
+    * or files.
     *
     * PARTIAL STATE IS THE ONLY ROLL-FORWARD TRIGGER (r15 ADVICE,
     * high): intents are journaled BEFORE the first publish, so an

@@ -630,8 +630,9 @@ case class DvAddColumnsCommand(ident: Seq[String], root: String,
   * O(manifest), never a data scan (Spark's own v1 AnalyzeTableCommand
   * would row-scan through the fallback relation). Catalog stats land
   * via `alterTableStats`, feeding the same CBO machinery
-  * `cbo_join_reorder` demonstrates (join reordering needs stats;
-  * AqeProbe measured that AQE alone never repairs join ORDER).
+  * `cbo_join_reorder` demonstrates (join reordering needs stats; the
+  * round-10 AQE × CBO measurement in PLANS.md showed that AQE alone
+  * never repairs join ORDER).
   * Partitioned (`PARTITION (...)`) and column-level forms fall
   * through to Spark untouched.
   */

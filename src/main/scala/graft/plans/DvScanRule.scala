@@ -22,17 +22,14 @@ import graft.sources.DvRelation
   * The swap re-reads the manifest at optimization time — each query
   * serves the table's then-current committed state (a DataFrame held
   * across mutations re-plans per action, same freshness rule as the
-  * catalog's own file sources). `spark.graft.dvScan=false` disables
-  * the swap (the relation's PrunedScan fallback is correct, just
-  * conservative) — which is also how DvSourceSpec exercises both
-  * tiers in one session.
+  * catalog's own file sources). A session that never installed the
+  * rule reads through the relation's PrunedScan fallback — correct,
+  * just conservative.
   */
 case class DvScanRule(session: SparkSession) extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = session.conf.get("spark.graft.dvScan", "true") == "true"
-    if (!enabled) plan
-    else plan.transform {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transform {
       case l: LogicalRelation if l.relation.isInstanceOf[DvRelation] =>
         // served() respects reader-option time travel: a pinned
         // version swaps to ITS manifest-fed plan, the live relation
@@ -68,7 +65,6 @@ case class DvScanRule(session: SparkSession) extends Rule[LogicalPlan] {
         Project(s.output.map(o =>
           Alias(byName(o.name), o.name)(exprId = o.exprId)), newPlan)
     }
-  }
 
   private def wrapped(scan: org.apache.spark.sql.connector.read.Scan)
       : Option[graft.sources.DvBridgedScan] = scan match {

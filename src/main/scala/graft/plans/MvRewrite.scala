@@ -64,16 +64,14 @@ import org.apache.spark.sql.functions.expr
   * FILTER'd aggregates, aggregates with no registered partial (e.g.
   * AVG — register its SUM and COUNT and write the ratio above the agg
   * instead), filters or groupings that reach non-grain columns,
-  * non-column-pruning projections under the aggregate, stale summaries,
-  * and `spark.graft.mvRewrite=false`.
+  * non-column-pruning projections under the aggregate, and stale
+  * summaries.
   */
 case class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      session.conf.get("spark.graft.mvRewrite", "true") == "true"
     val mvs = MvCatalog.registered(session)
-    if (!enabled || mvs.isEmpty) plan
+    if (mvs.isEmpty) plan
     else plan.transform {
       case agg: Aggregate =>
         mvs.view.flatMap(tryRewrite(agg, _)).headOption.getOrElse(agg)

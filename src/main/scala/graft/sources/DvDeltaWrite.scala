@@ -159,6 +159,8 @@ private[sources] class DvDeltaBatchWrite(root: String,
   private val stage =
     s"$root/_dml_stage_${java.util.UUID.randomUUID().toString.take(12)}"
   @volatile private var claimed = false
+  /** Largest blob set [[publishBlobs]] renames on the driver. */
+  private val DriverPublishMax = 64
 
   /** Change-data recording rides the DSv2 UPDATE too (opt-in conf):
     * the writers journal their tombstoned coordinates under the
@@ -286,9 +288,13 @@ private[sources] class DvDeltaBatchWrite(root: String,
         // trigger" is enforced where it belongs — in replayIntents,
         // which DROPS an intent none of whose destinations exists
         // (statement failed before any publish) instead of rolling it
-        // forward. Best-effort: a failure here that published NOTHING
-        // also removes its own intent immediately, so the failed
-        // statement leaves zero state without waiting for a replay.
+        // forward. Best-effort: a driver-side publish that failed
+        // having published NOTHING also removes its own intent
+        // immediately, so the failed statement leaves zero state
+        // without waiting for a replay. A fanned-out publish keeps
+        // its intent: a zombie task may still rename a blob after
+        // the driver's existence check, and only the claim-holding
+        // replay can see that.
         pending.headOption.foreach { _ =>
           val intent = DvBlobs.writeIntent(root, pending)
           try {
@@ -297,8 +303,8 @@ private[sources] class DvDeltaBatchWrite(root: String,
           } catch {
             case e: Throwable =>
               try {
-                if (!pending.exists(p =>
-                    DvBlobs.publishedDestExists(p, root)))
+                if (pending.size <= DriverPublishMax && !pending.exists(
+                    p => DvBlobs.publishedDestExists(p, root)))
                   DvBlobs.removeIntent(intent)
               } catch { case _: Throwable => () }
               throw e
@@ -328,7 +334,7 @@ private[sources] class DvDeltaBatchWrite(root: String,
     */
   private def publishBlobs(pending: Seq[String]): Unit = {
     if (pending.isEmpty) ()
-    else if (pending.size <= 64)
+    else if (pending.size <= DriverPublishMax)
       pending.foreach(p => DvBlobs.publish(p, root): Unit)
     else {
       val r = root

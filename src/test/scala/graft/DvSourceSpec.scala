@@ -69,17 +69,19 @@ class DvSourceSpec extends SparkSpec {
     assert(plan.contains("dv_alive") && !plan.contains("BroadcastExchange"))
     assert(swapped.agg(sum("count")).head().getLong(0) == kept.count())
 
-    spark.conf.set("spark.graft.dvScan", "false")
-    try {
-      val fallback = spark.read.format("graft-dv").load(root)
-        .select("event_type", "user_id")
-      val fplan = fallback.queryExecution.executedPlan.toString
-      assert(!fplan.contains("ManifestFileIndex"),
-        s"fallback still hit the swapped plan:\n$fplan")
-      assert(fallback.count() == kept.count())
-      assert(fallback.filter(col("user_id") % 5 === 0).count() == 0,
-        "fallback leaked tombstoned rows")
-    } finally spark.conf.set("spark.graft.dvScan", "true")
+    // the rule-absent tier: a fresh session starts with fresh
+    // experimental methods, so it never installed the swap
+    val bare = spark.newSession()
+    assert(!bare.experimental.extraOptimizations.exists(
+      _.isInstanceOf[graft.plans.DvScanRule]))
+    val fallback = bare.read.format("graft-dv").load(root)
+      .select("event_type", "user_id")
+    val fplan = fallback.queryExecution.executedPlan.toString
+    assert(!fplan.contains("ManifestFileIndex"),
+      s"fallback still hit the swapped plan:\n$fplan")
+    assert(fallback.count() == kept.count())
+    assert(fallback.filter(col("user_id") % 5 === 0).count() == 0,
+      "fallback leaked tombstoned rows")
   }
 
   test("writer face: df.write.format(graft-dv) creates, appends behind " +

@@ -50,4 +50,21 @@ class RepoHygieneSpec extends AnyFunSuite {
     assert(strays.isEmpty,
       s"stray root files (shell-quoting debris?): ${strays.mkString(", ")}")
   }
+
+  /** Runnable mains are the engine's entry points, not scratch: a
+    * one-off measurement belongs in the benchmark's traced run
+    * (`graftbench/run.py --trace 1`), not in another probe `main`.
+    */
+  test("src/main defines exactly the kept entry-point mains") {
+    val mains = walk(new java.io.File("src/main")).flatMap { f =>
+      val text = new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      """def main\(""".r.findAllMatchIn(text).map { m =>
+        """object\s+(\w+)""".r.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse(f.getName)
+      }
+    }.toSet
+    assert(mains == Set("Bench", "Verify", "PlanStats", "RetryDemo",
+      "ScaleProbe", "LakeProbe"))
+  }
 }
