@@ -1,85 +1,84 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftPlanApi, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AnalyzeColumn, DeleteFromTable, MergeIntoTable, UpdateTable}
+import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, DeleteFromTable, LogicalPlan, MergeIntoTable, UpdateTable}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.plans.DvDmlRule
+import graft.plans.{DvAnalyzeRule, DvMaintenanceSql, DvSchemaEvolve, DvSessionNameRule}
+import graft.sources.DvDeltaWrite
 
-/** SQL entry point with DML routed to the graft-dv lakehouse layer.
+/** SQL entry point for sessions the engine does NOT build (the harness
+  * driver owns its session, so no extension rule runs in its
+  * analyzer). It applies to the parsed statement what
+  * `spark.sql.extensions=graft.functions.GraftExtensions` installs:
+  *  - the maintenance statements outside Spark's grammar
+  *    ([[DvMaintenanceSql]]: VACUUM, OPTIMIZE, RESTORE, ...);
+  *  - opt-in MERGE / INSERT BY NAME schema evolution
+  *    ([[DvSchemaEvolve]]), which must widen the target before analysis;
+  *  - [[DvSessionNameRule]]: a graft-dv session-catalog name is a name
+  *    for the DSv2 table, so Spark's own DSv2 paths run DML, time
+  *    travel, column ALTERs and INSERT on it;
+  *  - [[DvAnalyzeRule]]: manifest-native ANALYZE.
+  * Everything else delegates verbatim to `spark.sql`, so this is a
+  * drop-in superset, and error surfaces are Spark's own.
   *
-  * For a session built with the engine's extensions
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`), plain
-  * `spark.sql("DELETE FROM ev WHERE ...")` already works — the
-  * injected [[graft.plans.DvDmlRule]] swaps the resolved statement in
-  * the analyzer's resolution window. This wrapper serves sessions the
-  * engine does NOT build (the harness driver owns its session, and
-  * `experimental.extraOptimizations` runs AFTER checkAnalysis has
-  * rejected DML on a V1 relation): it parses with the session's own
-  * parser, lets the session's own analyzer RESOLVE the statement
-  * (conditions, assignments, MERGE star expansion — all standard
-  * Spark), applies the same swap rule, and executes. Everything that
-  * is not a DML statement over a graft-dv table — SELECTs, DDL, DML
-  * on other sources — delegates verbatim to `spark.sql`, so this is a
-  * drop-in superset.
-  *
-  * Error surfaces are unchanged: an unresolvable statement (bad
-  * column, bad table) never matches the rule's `resolved` guard and
-  * falls through to `spark.sql`, which raises the standard analyzer
-  * error.
+  * DELETE / UPDATE / MERGE on a graft-dv table return their row
+  * counts — `deleted_rows`, `updated_rows`, or
+  * (`tombstoned_rows`, `appended_rows`) — read off the metrics the
+  * DSv2 write posts ([[graft.sources.DvDeltaWrite]]).
   */
 object GraftSql {
 
   def sql(spark: SparkSession, text: String): DataFrame = {
-    // maintenance statements (VACUUM/OPTIMIZE) are not in Spark's
-    // grammar at all — recognize them before the parser rejects them
-    graft.plans.DvMaintenanceSql.parse(text) match {
+    DvMaintenanceSql.parse(text) match {
       case Some(cmd) => return GraftPlanApi.ofRows(spark, cmd)
       case None => ()
     }
     val parsed = spark.sessionState.sqlParser.parsePlan(text)
-    // time travel swaps on the PARSED plan: Spark's own resolution
-    // throws UNSUPPORTED_FEATURE.TIME_TRAVEL for non-DSv2 relations
-    // before any post-resolution hook could run
-    val pre = graft.plans.DvTimeTravelRule(spark)(parsed)
-    parsed match {
+    DvSchemaEvolve.maybeWiden(spark, parsed)
+    val routed = route(spark, parsed)
+    val df =
+      if (routed eq parsed) spark.sql(text)
+      else GraftPlanApi.ofRows(spark, routed)
+    routed match {
       case _: DeleteFromTable | _: UpdateTable | _: MergeIntoTable =>
-        // MERGE schema evolution (opt-in): widen the target BEFORE
-        // analysis so star actions cover the source's new columns
-        graft.plans.DvSchemaEvolve.maybeWiden(spark, parsed)
-        val analyzed = spark.sessionState.analyzer.execute(pre)
-        val routed = DvDmlRule(analyzed)
-        if ((routed eq analyzed) && (pre eq parsed)) spark.sql(text)
-        else GraftPlanApi.ofRows(spark, routed)
-      case ac: AddColumns =>
-        graft.plans.DvAlterColumns.route(spark, ac)
-          .map(cmd => GraftPlanApi.ofRows(spark, cmd))
-          .getOrElse(spark.sql(text))
-      case rc: org.apache.spark.sql.catalyst.plans.logical.RenameColumn =>
-        graft.plans.DvAlterColumns.routeRename(spark, rc)
-          .map(cmd => GraftPlanApi.ofRows(spark, cmd))
-          .getOrElse(spark.sql(text))
-      case dc: org.apache.spark.sql.catalyst.plans.logical.DropColumns =>
-        graft.plans.DvAlterColumns.routeDrop(spark, dc)
-          .map(cmd => GraftPlanApi.ofRows(spark, cmd))
-          .getOrElse(spark.sql(text))
-      case at: org.apache.spark.sql.catalyst.plans.logical.AnalyzeTable =>
-        graft.plans.DvAnalyze.route(spark, at)
-          .map(cmd => GraftPlanApi.ofRows(spark, cmd))
-          .getOrElse(spark.sql(text))
-      case ac: AnalyzeColumn =>
-        graft.plans.DvAnalyzeColumns.route(spark, ac)
-          .map(cmd => GraftPlanApi.ofRows(spark, cmd))
-          .getOrElse(spark.sql(text))
-      case i: org.apache.spark.sql.catalyst.plans.logical
-          .InsertIntoStatement =>
-        // INSERT BY NAME schema evolution (opt-in, same autoMerge
-        // flag): widen the target before re-analysis
-        graft.plans.DvSchemaEvolve.maybeWiden(spark, i)
-        spark.sql(text)
-      case _ =>
-        if (pre eq parsed) spark.sql(text)
-        else GraftPlanApi.ofRows(spark, pre)
+        rowCounts(spark, routed, df)
+      case _ => df
     }
   }
 
+  /** What the extensions' hints-batch rules do to a parsed statement. */
+  private[graft] def route(spark: SparkSession,
+      parsed: LogicalPlan): LogicalPlan =
+    DvAnalyzeRule(spark)(DvSessionNameRule(spark)(parsed))
+
+  /** The counts a graft-dv row-level write posted, as the statement's
+    * result; `df` itself for any other DML target.
+    */
+  private def rowCounts(spark: SparkSession, stmt: LogicalPlan,
+      df: DataFrame): DataFrame = {
+    val metrics = df.queryExecution.commandExecuted match {
+      case c: CommandResult => c.commandPhysicalPlan.collectFirst {
+        case p if p.metrics.contains(DvDeltaWrite.AppendedRows) =>
+          p.metrics
+      }
+      case _ => None
+    }
+    metrics.fold(df) { m =>
+      // an insert-only MERGE compiles to a plain append, which
+      // tombstones nothing
+      val tombstoned =
+        m.get(DvDeltaWrite.TombstonedRows).fold(0L)(_.value)
+      val appended = m(DvDeltaWrite.AppendedRows).value
+      val cols = stmt match {
+        case _: DeleteFromTable => Seq("deleted_rows" -> tombstoned)
+        case _: UpdateTable => Seq("updated_rows" -> tombstoned)
+        case _ => Seq("tombstoned_rows" -> tombstoned,
+          "appended_rows" -> appended)
+      }
+      spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(cols.map(_._2))),
+        StructType(cols.map(c => StructField(c._1, LongType, false))))
+    }
+  }
 }

@@ -490,9 +490,7 @@ object LakeProbe {
     // evidence.
     {
       import graft.operators.{DeletionVectors => DV}
-      spark.conf.set("spark.sql.catalog.graftdv",
-        "graft.sources.GraftDvCatalog")
-      graft.plans.GraftPlans.ensureDvScan(spark)
+      graft.plans.GraftPlans.ensureDvCatalog(spark)
       def probeMerge(tag: String, events: DataFrame): (Long, Double) = {
         val root = s"$tmp/graft_lakeprobe_merge_$tag"
         val withDay = events
@@ -637,8 +635,7 @@ object LakeProbe {
             .filter(col("amount").isNotNull).count() == want,
           "the mapped read must serve every row under the new name")
         DV.refreshIndex(spark, root, "event_id"): Unit
-        spark.conf.set("spark.sql.catalog.graftdv",
-          "graft.sources.GraftDvCatalog")
+        graft.plans.GraftPlans.ensureDvCatalog(spark)
         val key = withDay.orderBy("event_id")
           .select("event_id").head().getLong(0)
         val q = spark.sql(

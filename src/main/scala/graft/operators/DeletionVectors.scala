@@ -1346,9 +1346,9 @@ object DeletionVectors {
       scanWithPos(spark, root, entries, meta).drop("__file", "__pos")
 
   /** Masked positional scan — the table's columns plus `__file` /
-    * `__pos` (the physical coordinates tombstones address). The hook
-    * the SQL DML layer ([[graft.plans.DvDml]]) classifies against; an
-    * empty live set yields an empty frame with the same shape.
+    * `__pos` (the physical coordinates tombstones address) — what the
+    * DSv2 row-level operations scan; an empty live set yields an
+    * empty frame with the same shape.
     */
   private[graft] def readWithPos(spark: SparkSession,
       root: String): DataFrame = readPos0(spark, root)
@@ -1430,19 +1430,6 @@ object DeletionVectors {
       maintWaitMs)
   }
 
-  /** Predicate form of [[delete]] — tombstone every live row matching
-    * `cond` (the `DELETE FROM t WHERE ...` shape, see
-    * [[graft.plans.DvDml]]). Same write path, same purge fencing; the
-    * marking scan pushes `cond` into the masked parquet scan instead
-    * of semi-joining a victim-key frame.
-    */
-  def deleteWhere(spark: SparkSession, root: String,
-      cond: org.apache.spark.sql.Column,
-      maintWaitMs: Long = 15L * 60 * 1000): Long =
-    markWhere(spark, root,
-      scan => scan.filter(cond).select(col("__file"), col("__pos")),
-      maintWaitMs)
-
   /** The shared mark-and-fence core every tombstoning path rides:
     * `mark` maps the masked positional scan (table columns + `__file`,
     * `__pos`) to the rows to tombstone, and MUST be a deterministic
@@ -1514,47 +1501,6 @@ object DeletionVectors {
           }
       }
     (nAcc.value, touchedAcc.value.asScala.toSet)
-  }
-
-  /** DELETE with change data, r14 ADVICE fix (low): the former shape
-    * snapshotted the victims' images and THEN ran the cond-based
-    * marking scan with no fence between — a row inserted (and
-    * matching) in that window was tombstoned yet absent from the
-    * 'del' sidecar, silently drifting derived consumers until reseed.
-    * Here the victim set is computed ONCE (images + coordinates in the
-    * same masked scan, frozen by a localCheckpoint); the sidecar
-    * records exactly those images and the tombstones land on exactly
-    * those coordinates — the two can no longer disagree. The whole
-    * statement runs under the maintenance claim (the DSv2 delta
-    * write's discipline) so no purge/zorder can replace a touched
-    * file between the freeze and the blob writes — which is what lets
-    * the frozen (file, pos) set stay valid without [[markWhere]]'s
-    * re-mark fence. A row inserted after the freeze simply isn't part
-    * of this statement's snapshot (and so is neither tombstoned nor
-    * recorded — consistent).
-    *
-    * @param victimize maps the masked positional scan to the victim
-    *        rows, keeping `__file`/`__pos` plus the table columns
-    *        (the images the sidecar records)
-    * @return rows marked
-    */
-  private[graft] def deleteWithChangeData(spark: SparkSession,
-      root: String, victimize: DataFrame => DataFrame, cdf: CdfStage,
-      maintWaitMs: Long = 15L * 60 * 1000): Long = {
-    requireWriterFeatures(spark, root)
-    acquireMaintenanceClaim(spark, root, maintWaitMs)
-    try {
-      val entries = liveEntries(spark, root)
-      if (entries.isEmpty) return 0L
-      val victims = victimize(
-          scanWithPos(spark, root, entries, currentMeta(spark, root)))
-        .localCheckpoint(true)
-      if (victims.isEmpty) return 0L
-      cdf.writeDeleted(victims.drop("__file", "__pos"))
-      val (n, _) = writeMarks(spark, root,
-        victims.select(col("__file"), col("__pos")), entries.size)
-      n
-    } finally releaseMaintenanceClaim(spark, root)
   }
 
   // ---- purge ----------------------------------------------------------
@@ -2245,14 +2191,6 @@ object DeletionVectors {
   private[graft] def columnMappingOf(spark: SparkSession,
       root: String): Map[String, String] =
     currentMeta(spark, root).map(_.colMap).getOrElse(Map.empty)
-
-  /** Physical→logical rename of an arbitrary frame under the table's
-    * LIVE mapping — for consumers of raw staged/physical parquet
-    * outside the manifest-fed scan (the DSv2 CDF post-image read).
-    */
-  private[graft] def toLogicalDf(spark: SparkSession, root: String,
-      df: DataFrame): DataFrame =
-    toLogicalCols(df, currentMeta(spark, root))
 
   /** Map a write schema's field names logical→physical for the DSv2
     * executor writers (identity when no column was ever renamed).

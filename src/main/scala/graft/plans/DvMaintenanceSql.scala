@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators.{DeletionVectors => DV}
 
 /** SQL maintenance statements for graft-dv tables — the operational
-  * half of the lakehouse SQL surface (DML and time travel are
-  * [[DvDml]]/[[DvTimeTravelRule]]):
+  * half of the lakehouse SQL surface (DML, time travel and column
+  * ALTERs run through the DSv2 catalog, [[DvSessionNameRule]]):
   *
   * {{{
   *   VACUUM ev                                -- default retention
@@ -150,7 +150,7 @@ object DvMaintenanceSql {
       identText: String): String = {
     val ident = session.sessionState.sqlParser
       .parseMultipartIdentifier(identText)
-    DvDml.dvCatalogRoot(session, ident).getOrElse(
+    DvSessionName.dvCatalogRoot(session, ident).getOrElse(
       throw new IllegalArgumentException(
         s"$identText is not a graft-dv catalog table — VACUUM/OPTIMIZE " +
           "operate on graft-dv tables only"))
@@ -443,186 +443,6 @@ case class DvRestoreCommand(identText: String,
   }
 }
 
-/** `ALTER TABLE t ADD COLUMNS (...)` routing, shared by BOTH session
-  * styles: [[graft.GraftSql]] pattern-matches the parsed plan, and
-  * extension-built sessions get [[DvAlterRule]] in the resolution
-  * window (plain `spark.sql` — the same parity the DML swap has).
-  * Validation of the column specs happens here; the manifest flip +
-  * catalog schema refresh happen in the command's run.
-  */
-object DvAlterColumns {
-
-  import org.apache.spark.sql.catalyst.analysis.UnresolvedTable
-  import org.apache.spark.sql.catalyst.plans.logical.AddColumns
-
-  def route(session: SparkSession,
-      ac: AddColumns): Option[LogicalPlan] = ac.table match {
-    case u: UnresolvedTable =>
-      DvDml.dvCatalogRoot(session, u.multipartIdentifier).map { root =>
-        val fields = ac.columnsToAdd.map { q =>
-          require(q.path.isEmpty,
-            "graft-dv supports adding TOP-LEVEL columns only " +
-              s"(got ${q.name.mkString(".")})")
-          require(q.position.isEmpty,
-            "graft-dv adds columns at the END of the schema — " +
-              "FIRST/AFTER positioning is not supported")
-          require(q.nullable,
-            s"added column ${q.colName} must be nullable: existing " +
-              "files null-fill it (the parquet missing-column rule)")
-          val mb = new org.apache.spark.sql.types.MetadataBuilder()
-          q.comment.foreach(c => mb.putString("comment", c))
-          // DEFAULT rides Spark's OWN column-default metadata: the
-          // parquet reader fills EXISTS_DEFAULT for files missing the
-          // column (all pre-add files), and INSERT statements omitting
-          // it resolve CURRENT_DEFAULT — native machinery, no custom
-          // read/write path. Defaults are FIXED at add time (no SET
-          // DEFAULT), so the two keys always agree.
-          q.default.foreach { d =>
-            import org.apache.spark.sql.catalyst.util.{ResolveDefaultColumns => RDC}
-            mb.putString(RDC.CURRENT_DEFAULT_COLUMN_METADATA_KEY,
-              d.originalSQL)
-            mb.putString(RDC.EXISTS_DEFAULT_COLUMN_METADATA_KEY,
-              d.originalSQL)
-          }
-          org.apache.spark.sql.types.StructField(
-            q.colName, q.dataType, nullable = true, mb.build())
-        }
-        DvAddColumnsCommand(u.multipartIdentifier, root,
-          org.apache.spark.sql.types.StructType(fields))
-      }
-    case _ => None
-  }
-
-  /** `ALTER TABLE t RENAME COLUMN a TO b` on a graft-dv catalog table
-    * → the column-mapping flip ([[DV.alterRenameColumn]]).
-    */
-  def routeRename(session: SparkSession,
-      rc: org.apache.spark.sql.catalyst.plans.logical.RenameColumn)
-      : Option[LogicalPlan] = rc.table match {
-    case u: UnresolvedTable =>
-      DvDml.dvCatalogRoot(session, u.multipartIdentifier).map { root =>
-        val from = fieldNameOf(rc.column, "RENAME COLUMN")
-        DvRenameColumnCommand(u.multipartIdentifier, root, from,
-          rc.newName)
-      }
-    case _ => None
-  }
-
-  /** `ALTER TABLE t DROP COLUMN c` (single or multi) on a graft-dv
-    * catalog table → metadata-only drops ([[DV.alterDropColumn]]).
-    */
-  def routeDrop(session: SparkSession,
-      dc: org.apache.spark.sql.catalyst.plans.logical.DropColumns)
-      : Option[LogicalPlan] = dc.table match {
-    case u: UnresolvedTable =>
-      DvDml.dvCatalogRoot(session, u.multipartIdentifier).map { root =>
-        require(!dc.ifExists,
-          "graft-dv DROP COLUMN IF EXISTS is not supported — the " +
-            "manifest flip validates existence loudly")
-        val names = dc.columnsToDrop
-          .map(fieldNameOf(_, "DROP COLUMN"))
-        DvDropColumnsCommand(u.multipartIdentifier, root, names)
-      }
-    case _ => None
-  }
-
-  /** Bring a session-catalog entry's stored schema in step after a
-    * manifest-level schema change and drop cached relations — shared
-    * by the ADD/RENAME/DROP COLUMN commands.
-    */
-  def refreshCatalogSchema(session: SparkSession, ident: Seq[String],
-      root: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val tid = ident match {
-      case Seq(t) => Some(TableIdentifier(t))
-      case Seq(db, t) => Some(TableIdentifier(t, Some(db)))
-      case Seq(c, db, t) if c.equalsIgnoreCase("spark_catalog") =>
-        Some(TableIdentifier(t, Some(db)))
-      case _ => None
-    }
-    tid.foreach { id =>
-      val cat = session.sessionState.catalog
-      if (cat.tableExists(id)) {
-        // full-metadata alter, not alterTableDataSchema: the latter
-        // refuses to NARROW a stored schema, and RENAME/DROP COLUMN
-        // legitimately remove names from it
-        val old = cat.getTableMetadata(id)
-        cat.alterTable(old.copy(schema = DV.read(session, root).schema))
-        cat.refreshTable(id)
-      }
-    }
-  }
-
-  private def fieldNameOf(
-      f: org.apache.spark.sql.catalyst.analysis.FieldName,
-      verb: String): String = f match {
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedFieldName =>
-      require(u.name.length == 1,
-        s"graft-dv $verb works on TOP-LEVEL columns only; got " +
-          u.name.mkString("."))
-      u.name.head
-    case other => throw new IllegalArgumentException(
-      s"unexpected $verb field reference: $other")
-  }
-}
-
-/** The executed half of `ALTER TABLE ... RENAME COLUMN`: one
-  * metadata-only manifest flip (column mapping — the physical parquet
-  * name stays frozen; see [[DV.alterRenameColumn]]), then the catalog
-  * entry's stored schema refreshes so the next `spark.table` serves
-  * the new name.
-  */
-case class DvRenameColumnCommand(ident: Seq[String], root: String,
-    from: String, to: String) extends LeafRunnableCommand {
-
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val v = DV.alterRenameColumn(session, root, from, to)
-    DvAlterColumns.refreshCatalogSchema(session, ident, root)
-    Seq(Row(v))
-  }
-}
-
-/** The executed half of `ALTER TABLE ... DROP COLUMN(S)`: one
-  * metadata-only manifest flip per column (the physical bytes stay in
-  * existing files until natural rewrites shed them), then the catalog
-  * schema refreshes.
-  */
-case class DvDropColumnsCommand(ident: Seq[String], root: String,
-    names: Seq[String]) extends LeafRunnableCommand {
-
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val v = names.map(n => DV.alterDropColumn(session, root, n)).last
-    DvAlterColumns.refreshCatalogSchema(session, ident, root)
-    Seq(Row(v))
-  }
-}
-
-/** The executed half of `ALTER TABLE ... ADD COLUMNS`: one
-  * metadata-only manifest flip (validated against the REBASED base
-  * inside the CAS loop), then the catalog entry's stored schema is
-  * brought in step + the relation cache refreshed so the very next
-  * `spark.table` serves the added column.
-  */
-case class DvAddColumnsCommand(ident: Seq[String], root: String,
-    add: org.apache.spark.sql.types.StructType)
-    extends LeafRunnableCommand {
-
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val v = DV.alterAddColumns(session, root, add)
-    DvAlterColumns.refreshCatalogSchema(session, ident, root)
-    Seq(Row(v))
-  }
-}
-
 /** `ANALYZE TABLE t COMPUTE STATISTICS [NOSCAN]` on graft-dv: the
   * manifest already HOLDS the statistics — live bytes and physical
   * rows are one metadata aggregate, and the visible row count
@@ -652,7 +472,7 @@ object DvAnalyze {
       at: AnalyzeTable): Option[LogicalPlan] =
     if (at.partitionSpec.nonEmpty) None
     else identOf(at.child).flatMap(id =>
-      DvDml.dvCatalogRoot(session, id).map(root =>
+      DvSessionName.dvCatalogRoot(session, id).map(root =>
         DvAnalyzeCommand(id, root)))
 }
 
@@ -706,7 +526,7 @@ object DvAnalyzeColumns {
   def route(session: SparkSession,
       ac: AnalyzeColumn): Option[LogicalPlan] =
     DvAnalyze.identOf(ac.child).flatMap(id =>
-      DvDml.dvCatalogRoot(session, id).map(root =>
+      DvSessionName.dvCatalogRoot(session, id).map(root =>
         DvAnalyzeColumnsCommand(id, root, ac.columnNames,
           ac.allColumns)))
 }
@@ -872,21 +692,15 @@ case class DvAnalyzeColumnsCommand(ident: Seq[String], root: String,
 }
 
 /** Hints-window statement swap for extension-built sessions (and
-  * [[graft.GraftSql]]): AddColumns / AnalyzeTable / AnalyzeColumn on
-  * a graft-dv catalog table become their manifest-native commands
-  * before Spark's v1 fallback rejects (or row-scans) the provider.
-  * Non-dv targets pass through untouched.
+  * [[graft.GraftSql]]): AnalyzeTable / AnalyzeColumn on a graft-dv
+  * session name become their manifest-native commands before Spark's
+  * v1 fallback row-scans the provider (Spark has no ANALYZE for DSv2
+  * tables). Other targets pass through untouched.
   */
-case class DvAlterRule(session: SparkSession)
+case class DvAnalyzeRule(session: SparkSession)
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AnalyzeColumn, AnalyzeTable, DropColumns, RenameColumn}
+  import org.apache.spark.sql.catalyst.plans.logical.{AnalyzeColumn, AnalyzeTable}
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    case ac: AddColumns =>
-      DvAlterColumns.route(session, ac).getOrElse(plan)
-    case rc: RenameColumn =>
-      DvAlterColumns.routeRename(session, rc).getOrElse(plan)
-    case dc: DropColumns =>
-      DvAlterColumns.routeDrop(session, dc).getOrElse(plan)
     case at: AnalyzeTable =>
       DvAnalyze.route(session, at).getOrElse(plan)
     case ac: AnalyzeColumn =>

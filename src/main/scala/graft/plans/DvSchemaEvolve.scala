@@ -19,10 +19,13 @@ import graft.operators.{DeletionVectors => DV}
   * The widening runs PRE-analysis (the star expansion binds against
   * the target's resolved schema, so it must already be wide) on the
   * PARSED plan, for both catalog faces:
-  *  - session-catalog `USING graft-dv` names (the V1 command path);
-  *  - path-addressed DSv2 idents (`graftdv.`/root``) — the catalog
-  *    re-loads the table per statement, so the widened schema is
-  *    what Spark's own `RewriteMergeIntoTable` resolves against.
+  *  - session-catalog `USING graft-dv` names, whose catalog entry is
+  *    refreshed too (sessions reading the name through the V1
+  *    relation see the widened schema);
+  *  - path-addressed DSv2 idents (`graftdv.`<root>``).
+  * Both resolve to the DSv2 table, which the catalog re-loads per
+  * statement, so the widened schema is what Spark's own
+  * `RewriteMergeIntoTable` resolves against.
   * Off by default: silent schema growth on a typo'd source column is
   * exactly what an opt-in flag exists to prevent.
   */
@@ -118,13 +121,11 @@ object DvSchemaEvolve {
     if (extra.nonEmpty) targetRoot(spark, target).foreach { root =>
       DV.alterAddColumns(spark, root,
         StructType(extra.map(_.copy(nullable = true)).toArray)): Unit
-      // bring a session-catalog entry (V1 name) in step so the
-      // statement's own resolution sees the widened schema
+      // bring a session-catalog entry in step for V1 readers
       target.collectFirst {
         case u: UnresolvedRelation => u.multipartIdentifier
-      }.foreach { ident =>
-        if (DvDml.dvCatalogRoot(spark, ident).isDefined)
-          DvAlterColumns.refreshCatalogSchema(spark, ident, root)
+      }.flatMap(DvSessionName.entry(spark, _)).foreach { case (id, r) =>
+        DvSessionName.refreshCatalogSchema(spark, id, r)
       }
     }
   }
@@ -138,7 +139,7 @@ object DvSchemaEvolve {
     case SubqueryAlias(_, child) => targetRoot(spark, child)
     case u: UnresolvedRelation =>
       val parts = u.multipartIdentifier
-      DvDml.dvCatalogRoot(spark, parts).orElse {
+      DvSessionName.dvCatalogRoot(spark, parts).orElse {
         if (parts.length == 2 && parts(1).contains("/") &&
             spark.conf.getOption(
               s"spark.sql.catalog.${parts.head}")

@@ -19,20 +19,15 @@ object GraftPlans {
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(s => DvScanRule(s))
-    // SQL DML (DELETE/UPDATE/MERGE) on graft-dv tables: must swap in
-    // the RESOLUTION window — checkAnalysis rejects DML over a V1
-    // relation before any optimizer rule could run. Driver-owned
-    // sessions get the same routing via graft.GraftSql.sql.
-    ext.injectResolutionRule(_ => DvDmlRule)
-    // SQL time travel (VERSION/TIMESTAMP AS OF): must swap BEFORE the
-    // resolution batch (ResolveRelations itself throws on time travel
-    // over a V1 relation) — the Hints batch precedes Resolution.
-    ext.injectHintResolutionRule(s => DvTimeTravelRule(s))
-    // ALTER TABLE ... ADD COLUMNS on graft-dv: ResolveSessionCatalog
-    // converts (and rejects) the v2 AddColumns inside the Resolution
-    // batch itself, so — like time travel — the swap must run in the
-    // HINTS batch, on the parsed plan.
-    ext.injectHintResolutionRule(s => DvAlterRule(s))
+    // graft-dv session-catalog names resolve to the DSv2 table: the
+    // swap must run in the HINTS batch, on the parsed plan — the
+    // Resolution batch would bind the session catalog's V1 relation
+    // (and reject time travel, DML and column ALTERs on it). Spark's
+    // own DSv2 paths then run every statement.
+    ext.injectHintResolutionRule(s => DvSessionNameRule(s))
+    // ANALYZE on graft-dv session names: Spark has no DSv2 ANALYZE,
+    // and the V1 one would row-scan the table
+    ext.injectHintResolutionRule(s => DvAnalyzeRule(s))
     // SQL maintenance statements (VACUUM/OPTIMIZE): not in Spark's
     // grammar — a delegating parser wrapper recognizes exactly the
     // two shapes (the Delta injectParser pattern).
@@ -47,6 +42,21 @@ object GraftPlans {
     val opts = spark.experimental.extraOptimizations
     if (!opts.contains(PushFilterThroughAsofJoin))
       spark.experimental.extraOptimizations = opts :+ PushFilterThroughAsofJoin
+  }
+
+  /** Name the graft-dv DSv2 catalog is registered under. */
+  val DvCatalog = "graftdv"
+
+  /** Idempotent per-session registration of the graft-dv DSv2 catalog
+    * as [[DvCatalog]] (a RUNTIME conf, so sessions the engine did not
+    * build get it too) plus the scan swap ([[ensureDvScan]]), so
+    * catalog reads compile to the direct masked plan.
+    */
+  def ensureDvCatalog(spark: SparkSession): Unit = {
+    val key = s"spark.sql.catalog.$DvCatalog"
+    val cls = classOf[graft.sources.GraftDvCatalog].getName
+    if (!spark.conf.getOption(key).contains(cls)) spark.conf.set(key, cls)
+    ensureDvScan(spark)
   }
 
   /** Idempotent per-session install of the DV-table placeholder swap

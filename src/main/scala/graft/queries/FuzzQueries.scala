@@ -549,8 +549,7 @@ object FuzzQueries {
       leg("L16")
       // L17: DSv2 MERGE (Spark's own row-level rewrite driving the
       // delta writer) onto the mid-evolution table
-      spark.conf.set("spark.sql.catalog.graftdv",
-        "graft.sources.GraftDvCatalog")
+      graft.plans.GraftPlans.ensureDvCatalog(spark)
       ev0.filter(h("fz8_", col("event_id")) % 12 === 0)
         .select(col("event_id")).localCheckpoint()
         .createOrReplaceTempView("fuzz_dv_merge_src")

@@ -1266,21 +1266,16 @@ object ScaleQueries {
     * is per-session-catalog; the name embeds the session + sf so
     * parallel suites never cross roots).
     */
-  /** DSv2 catalog identifier for a DV root: registers
-    * [[graft.sources.GraftDvCatalog]] on the session (a RUNTIME conf,
-    * so the driver-owned Verify/Bench sessions get it too) and
-    * installs the scan swap so catalog reads compile to the direct
-    * masked plan. The dv_sql_* DML queries run through THIS face —
-    * DELETE/UPDATE/MERGE resolve via Spark's own row-level rewrite
-    * rules (SupportsDelta), with no injected analyzer machinery and
-    * no GraftSql wrapper; the V1 command path remains only for
-    * session-catalog `USING graft-dv` names (the demoted tier).
+  /** DSv2 catalog identifier for a DV root, with the catalog
+    * registered on the session ([[graft.plans.GraftPlans.ensureDvCatalog]]).
+    * The dv_sql_* DML queries run through this face — DELETE/UPDATE/
+    * MERGE resolve via Spark's own row-level rewrite rules
+    * (SupportsDelta), with no GraftSql wrapper. A session-catalog
+    * `USING graft-dv` name is a name for the same DSv2 table.
     */
   private def dvV2Ident(spark: SparkSession, root: String): String = {
-    spark.conf.set("spark.sql.catalog.graftdv",
-      "graft.sources.GraftDvCatalog")
-    graft.plans.GraftPlans.ensureDvScan(spark)
-    s"graftdv.`$root`"
+    graft.plans.GraftPlans.ensureDvCatalog(spark)
+    s"${graft.plans.GraftPlans.DvCatalog}.`$root`"
   }
 
   private def dvCatalogTable(spark: SparkSession, sfDir: String,
@@ -1872,8 +1867,8 @@ object ScaleQueries {
        |  (SELECT count(*) FROM events WHERE $vic) AS tombstoned_rows""".stripMargin
   }
 
-  /** SQL TIME TRAVEL on the graft-dv catalog table
-    * ([[graft.plans.DvTimeTravelRule]] via [[graft.GraftSql]]): one
+  /** SQL TIME TRAVEL on the graft-dv catalog table (the catalog's
+    * versioned `loadTable`, reached via [[graft.GraftSql]]): one
     * statement unions a `VERSION AS OF 1` snapshot aggregate with the
     * current table's — both read through the manifest (each version
     * under its own recorded schema), with the pinned RETROACTIVE
@@ -2238,8 +2233,8 @@ object ScaleQueries {
   }
 
   /** `ALTER TABLE ... ADD COLUMNS` on the graft-dv catalog table
-    * ([[graft.GraftSql]] routing the parsed AddColumns to a
-    * metadata-only manifest flip + a catalog schema refresh): the
+    * ([[graft.GraftSql]]: the DSv2 catalog's metadata-only manifest
+    * flip, then a refresh of the name's catalog entry): the
     * setup ALTERs `priority INT` onto the table and appends a batch
     * CARRYING it, and the read — `spark.table`, catalog in/out — must
     * null-fill every pre-alter row while serving the batch's values.

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
@@ -37,12 +38,14 @@ import graft.operators.{DeletionVectors => DV, Snapshots}
   *   DELETE / UPDATE / MERGE                           -- SupportsDelta
   * }}}
   *
-  * This replaces the dual-injection machinery (resolution rule + hint
-  * rule + parser wrapper for extension sessions AND `GraftSql.sql`
-  * pre-analysis routing for driver-owned ones) for every statement
-  * Spark's grammar covers; only VACUUM/OPTIMIZE (not in the grammar at
-  * all) keep the parser-level route. The V1 `graft-dv` format face
-  * remains as the DataFrame-API reader/writer; it is the DEMOTED tier.
+  * This is graft-dv's one SQL path for every statement Spark's grammar
+  * covers. A session-catalog `CREATE TABLE t USING graft-dv` name is
+  * a name for the same DSv2 table: [[graft.plans.DvSessionNameRule]]
+  * rewrites it to `graftdv.`<root>`` before resolution. Only the
+  * maintenance statements outside the grammar (VACUUM, OPTIMIZE,
+  * RESTORE, ...) keep a parser-level route, and ANALYZE keeps its
+  * manifest-native command (Spark has no DSv2 ANALYZE). The V1
+  * `graft-dv` format remains the DataFrame-API reader/writer.
   *
   * Identifier convention (the Delta `delta.`/path``` shape):
   * a name containing '/' IS the table root (`graftdv.`/abs/path``);
@@ -219,8 +222,20 @@ class GraftDvCatalog extends TableCatalog {
         require(a.position == null,
           "graft-dv ALTER does not support column positioning " +
             "(FIRST/AFTER) — columns append")
+        val mb = new org.apache.spark.sql.types.MetadataBuilder()
+        Option(a.comment).foreach(mb.putString("comment", _))
+        // DEFAULT rides Spark's own column-default metadata: the
+        // parquet reader fills EXISTS_DEFAULT for files missing the
+        // column (all pre-add files), and INSERTs omitting it resolve
+        // CURRENT_DEFAULT. Defaults are fixed at add time (no SET
+        // DEFAULT), so the two keys always agree.
+        Option(a.defaultValue).foreach { d =>
+          import org.apache.spark.sql.catalyst.util.{ResolveDefaultColumns => RDC}
+          mb.putString(RDC.CURRENT_DEFAULT_COLUMN_METADATA_KEY, d.getSql)
+          mb.putString(RDC.EXISTS_DEFAULT_COLUMN_METADATA_KEY, d.getSql)
+        }
         adds += org.apache.spark.sql.types.StructField(
-          a.fieldNames.head, a.dataType, nullable = true)
+          a.fieldNames.head, a.dataType, nullable = true, mb.build())
       case r: TableChange.RenameColumn =>
         require(r.fieldNames.length == 1,
           "graft-dv RENAME COLUMN works on top-level columns only; " +
@@ -597,6 +612,16 @@ private[sources] class DvV1WriteBuilder(table: DvV2Table)
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
   override def build(): Write = new V1Write {
+    // rows written, from the manifest's per-file counts (an
+    // insert-only MERGE compiles to this append; GraftSql reports it)
+    @volatile private var appended = 0L
+
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      Array(new DvAppendedRows)
+
+    override def reportDriverMetrics(): Array[CustomTaskMetric] =
+      Array(DvDeltaWrite.count(DvDeltaWrite.AppendedRows, appended))
+
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
         override def insert(data: DataFrame, overwrite: Boolean): Unit = {
@@ -607,13 +632,20 @@ private[sources] class DvV1WriteBuilder(table: DvV2Table)
           require(partCols.nonEmpty,
             s"graft-dv table at ${table.root} has an unrecoverable " +
               "partition layout — re-create it")
-          if (overwrite || truncateFirst)
-            // materialize BEFORE init deletes the root: an
-            // INSERT OVERWRITE t SELECT ... FROM t reads the table
-            // it is about to re-create
-            DV.init(spark, data.localCheckpoint(), table.root,
-              partCols): Unit
-          else DV.append(spark, table.root, partCols, data): Unit
+          val added =
+            if (overwrite || truncateFirst) {
+              // materialize BEFORE init deletes the root: an
+              // INSERT OVERWRITE t SELECT ... FROM t reads the table
+              // it is about to re-create
+              DV.init(spark, data.localCheckpoint(), table.root,
+                partCols): Unit
+              None
+            } else Some(DV.append(spark, table.root, partCols, data))
+          val live = DV.manifest(spark, table.root)
+          val n = added.fold(live)(fs => live.filter(col("file")
+              .isin(fs: _*)))
+            .agg(org.apache.spark.sql.functions.sum("rows")).head()
+          appended = if (n.isNullAt(0)) 0L else n.getLong(0)
         }
       }
   }

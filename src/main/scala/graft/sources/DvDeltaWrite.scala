@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
@@ -32,10 +33,11 @@ import graft.operators.{DeletionVectors => DV, DvBlobs}
   * The contract maps 1:1 onto the layer's storage model:
   *  - row identity is POSITIONAL — `rowId = (__file, __pos)`, the
   *    same metadata-column pair every tombstone rides;
-  *  - updates are represented as DELETE + INSERT
-  *    ([[DvRowLevelOperation.representUpdateAsDeleteAndInsert]]),
-  *    exactly the tombstone-old-image + append-new-image shape of
-  *    [[DV.upsert]] and the V1 DML commands;
+  *  - an updated row reaches the writer as ONE `update(id, row)`
+  *    call, stored as the tombstone-old-image + append-new-image
+  *    shape of [[DV.upsert]]; keeping the update whole (rather than
+  *    Spark's split delete + reinsert) is what lets change data tell
+  *    a MERGE's update pre-images from its deleted rows;
   *  - deletes land as per-file delta blobs written FROM THE EXECUTORS
   *    ([[DvBlobs.writeDelta]] — the driver never holds positions),
   *    PENDING under the stage dir until the commit publishes them;
@@ -61,11 +63,12 @@ import graft.operators.{DeletionVectors => DV, DvBlobs}
   * Concurrency: the write holds the table's maintenance claim from
   * writer-factory creation to commit, so purge/pack/zorder cannot
   * replace a file between the scan and its tombstones landing (the
-  * role [[DV.markWhere]]'s fence plays on the V1 path); the plan-time
-  * window before the claim is caught at commit by re-checking every
-  * tombstoned file against the live set — a raced write FAILS LOUDLY
-  * and commits nothing. CHECK constraints re-validate against the
-  * staged files inside the commit (see [[DV.commitStagedDml]]).
+  * role [[DV.markWhere]]'s fence plays for the DataFrame-API deletes);
+  * the plan-time window before the claim is caught at commit by
+  * re-checking every tombstoned file against the live set — a raced
+  * write FAILS LOUDLY and commits nothing. CHECK constraints
+  * re-validate against the staged files inside the commit (see
+  * [[DV.commitStagedDml]]).
   */
 class DvRowLevelOperation(table: DvV2Table,
     cmd: RowLevelOperation.Command)
@@ -76,7 +79,7 @@ class DvRowLevelOperation(table: DvV2Table,
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column("__file"), Expressions.column("__pos"))
 
-  override def representUpdateAsDeleteAndInsert: Boolean = true
+  override def representUpdateAsDeleteAndInsert: Boolean = false
 
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array.empty
@@ -115,13 +118,48 @@ private[sources] class DvDeltaWrite(table: DvV2Table,
     Expressions.sort(Expressions.column("__file"),
       SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
 
-  override def toBatch: DeltaBatchWrite =
+  private lazy val batch =
     new DvDeltaBatchWrite(table.root, cmd, info.schema())
+
+  override def toBatch: DeltaBatchWrite = batch
+
+  /** Row counts of the committed statement, posted on the write node
+    * once the commit returns — what [[graft.GraftSql.sql]] reports as
+    * the statement's result rows.
+    */
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new DvTombstonedRows, new DvAppendedRows)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    DvDeltaWrite.count(DvDeltaWrite.TombstonedRows, batch.tombstoned),
+    DvDeltaWrite.count(DvDeltaWrite.AppendedRows, batch.appended))
 }
 
-private[sources] object DvDeltaWrite {
-  /** Schema of the change-data coordinate journal (the tombstoned
-    * (file, pos) pairs a CDF-enabled UPDATE's writers record).
+/** Rows the statement tombstoned (deleted plus updated). */
+class DvTombstonedRows extends CustomSumMetric {
+  override def name(): String = DvDeltaWrite.TombstonedRows
+  override def description(): String = "rows tombstoned"
+}
+
+/** Rows the statement appended (inserted plus updated images). */
+class DvAppendedRows extends CustomSumMetric {
+  override def name(): String = DvDeltaWrite.AppendedRows
+  override def description(): String = "rows appended"
+}
+
+private[graft] object DvDeltaWrite {
+  val TombstonedRows = "tombstonedRows"
+  val AppendedRows = "appendedRows"
+
+  private[sources] def count(metric: String,
+      n: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = metric
+      override def value(): Long = n
+    }
+
+  /** Schema of the change-data coordinate journals (the tombstoned
+    * (file, pos) pairs a CDF-enabled statement's writers record).
     */
   val CoordSchema: StructType = StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
@@ -148,7 +186,7 @@ private[sources] class SerConf(@transient var value: Configuration)
 
 private[sources] case class DvDeltaCommitMessage(files: Seq[String],
     touchedFiles: Seq[String], blobs: Seq[String], deleted: Long,
-    inserted: Long) extends WriterCommitMessage
+    updated: Long, inserted: Long) extends WriterCommitMessage
 
 private[sources] class DvDeltaBatchWrite(root: String,
     cmd: RowLevelOperation.Command,
@@ -162,18 +200,20 @@ private[sources] class DvDeltaBatchWrite(root: String,
   /** Largest blob set [[publishBlobs]] renames on the driver. */
   private val DriverPublishMax = 64
 
-  /** Change-data recording rides the DSv2 UPDATE too (opt-in conf):
-    * the writers journal their tombstoned coordinates under the
-    * stage, and commit reconstructs the pre-images from the (still
-    * present) old files — see [[DV.rowsAtCoordinates]]. DELETE
-    * journals the same coordinates and surfaces them as 'delete'
-    * retraction rows keyed to a metadata-only commit. MERGE skips
-    * it (its inserts and update-images are indistinguishable at the
-    * writer; the V1 command path records images for MERGE).
+  /** Row counts of the committed statement (zero until commit). */
+  @volatile private[sources] var tombstoned = 0L
+  @volatile private[sources] var appended = 0L
+
+  /** Change-data recording (opt-in conf): the writers journal the
+    * coordinates they tombstone under the stage — updated rows under
+    * `_cdfpre`, deleted rows under `_cdfdel` — plus each update's new
+    * image under `_cdfpost`, and commit reconstructs the old images
+    * from the (still present) old files ([[DV.rowsAtCoordinates]]).
+    * Updates surface as update pre/post-image pairs, deletes as
+    * 'delete' retraction rows (keyed to a metadata-only commit when
+    * the statement appends nothing), inserts as plain 'insert' rows.
     */
-  private def cdfOn =
-    (cmd == RowLevelOperation.Command.UPDATE ||
-      cmd == RowLevelOperation.Command.DELETE) && DV.cdfEnabled(spark)
+  private def cdfOn = DV.cdfEnabled(spark)
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
@@ -200,11 +240,12 @@ private[sources] class DvDeltaBatchWrite(root: String,
     val (factory, conf) =
       if (dataSchema.isEmpty) (null: OutputWriterFactory, null: SerConf)
       else prepared(dataSchema)
-    val (coordFactory, coordConf) =
-      if (cdfOn) prepared(DvDeltaWrite.CoordSchema)
-      else (null: OutputWriterFactory, null: SerConf)
+    val journals =
+      if (cdfOn) Some(DvCdfJournals(prepared(DvDeltaWrite.CoordSchema),
+        prepared(rowSchema)))
+      else None
     new DvDeltaWriterFactory(root, stage, rowSchema, partCols,
-      dataSchema, factory, conf, coordFactory, coordConf)
+      dataSchema, factory, conf, journals)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -228,30 +269,28 @@ private[sources] class DvDeltaBatchWrite(root: String,
             s"(e.g. ${gone.take(2).mkString(", ")}) — nothing was " +
             "committed; re-run the statement")
       }
-      val anyInserts = msgs.exists(_.inserted > 0)
-      // change data (UPDATE + conf on): pre-images from the journaled
-      // coordinates, post-images = the staged rows, keyed to the
-      // commit by the same rename-on-CAS discipline the V1 path uses
-      val coordDir = new Path(s"$stage/_cdfpre")
-      val fs = coordDir.getFileSystem(
+      val anyInserts = msgs.exists(m => m.inserted + m.updated > 0)
+      // change data (conf on): old images from the journaled
+      // coordinates, keyed to the commit by the rename-on-CAS
+      // discipline of every change-data-recording commit
+      val fs = new Path(stage).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
+      def journal(kind: String): Option[String] =
+        Some(s"$stage/$kind").filter(d => fs.exists(new Path(d)))
+      val (pre, del) = (journal("_cdfpre"), journal("_cdfdel"))
       val cdf =
-        if (cdfOn && anyInserts && fs.exists(coordDir)) {
+        if (!cdfOn || (pre.isEmpty && del.isEmpty)) None
+        else {
           val c = new DV.CdfStage(spark, root)
-          c.writePre(DV.rowsAtCoordinates(spark, root,
-            spark.read.parquet(coordDir.toString)))
-          c.writePost(DV.toLogicalDf(spark, root,
-            spark.read.option("basePath", stage).parquet(stage)))
+          pre.foreach { d =>
+            c.writePre(DV.rowsAtCoordinates(spark, root,
+              spark.read.parquet(d)))
+            c.writePost(spark.read.parquet(s"$stage/_cdfpost"))
+          }
+          del.foreach(d => c.writeDeleted(DV.rowsAtCoordinates(spark,
+            root, spark.read.parquet(d))))
           Some(c)
-        } else if (cdfOn && !anyInserts && fs.exists(coordDir)) {
-          // DSv2 DELETE: the journaled coordinates' old images become
-          // the feed's 'delete' retraction rows, keyed below to a
-          // metadata-only commit (a delete changes no file set)
-          val c = new DV.CdfStage(spark, root)
-          c.writeDeleted(DV.rowsAtCoordinates(spark, root,
-            spark.read.parquet(coordDir.toString)))
-          Some(c)
-        } else None
+        }
       try {
         if (anyInserts) {
           DV.commitStagedDml(spark, root, stage, rowSchema, opName,
@@ -315,6 +354,8 @@ private[sources] class DvDeltaBatchWrite(root: String,
         if (!anyInserts && pending.nonEmpty)
           cdf.filter(_.recorded).foreach(c =>
             DV.commitChangeDataOnly(spark, root, c): Unit)
+        tombstoned = msgs.map(m => m.deleted + m.updated).sum
+        appended = msgs.map(m => m.inserted + m.updated).sum
       } finally cdf.foreach(_.cleanup())
     } finally cleanup()
     // opportunistic auto-pack AFTER the claim releases: a merge-heavy
@@ -398,16 +439,22 @@ private[sources] class DvDeltaBatchWrite(root: String,
   }
 }
 
+/** Writer set-up of the change-data journals: tombstoned
+  * coordinates, and update post-images in the row schema.
+  */
+private[sources] case class DvCdfJournals(
+    coords: (OutputWriterFactory, SerConf),
+    rows: (OutputWriterFactory, SerConf))
+
 private[sources] class DvDeltaWriterFactory(root: String, stage: String,
     rowSchema: StructType, partCols: Seq[String], dataSchema: StructType,
     factory: OutputWriterFactory, conf: SerConf,
-    coordFactory: OutputWriterFactory,
-    coordConf: SerConf) extends DeltaWriterFactory {
+    journals: Option[DvCdfJournals]) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new DvDeltaTaskWriter(root, stage, rowSchema, partCols, dataSchema,
-      factory, conf, coordFactory, coordConf, partitionId, taskId)
+      factory, conf, journals, partitionId, taskId)
 }
 
 /** Executor-side delta writer. Deletes buffer per target file and
@@ -426,7 +473,7 @@ private[sources] class DvDeltaWriterFactory(root: String, stage: String,
 private[sources] class DvDeltaTaskWriter(root: String, stage: String,
     rowSchema: StructType, partCols: Seq[String], dataSchema: StructType,
     factory: OutputWriterFactory, conf: SerConf,
-    coordFactory: OutputWriterFactory, coordConf: SerConf,
+    journals: Option[DvCdfJournals],
     partitionId: Int, taskId: Long) extends DeltaWriter[InternalRow] {
 
   // ---- delete side ---------------------------------------------------
@@ -436,6 +483,7 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
   private val touched = mutable.LinkedHashSet.empty[String]
   private val blobs = mutable.ArrayBuffer.empty[String]
   private var deleted = 0L
+  private var updated = 0L
   private val FlushAt = 1 << 22 // 32 MB of positions per file chunk
   // pending tombstones stay stage-confined until the driver's
   // commit-time publish — writeDelta under this root lays out the
@@ -444,29 +492,32 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
   // the stage itself, and the blobs must outlive it to publish after.
   private val pendingRoot = s"${stage}_dvpending"
 
-  // change-data coordinate journal (CDF-enabled UPDATE only)
-  private var coordWriter:
-    org.apache.spark.sql.execution.datasources.OutputWriter = null
+  // change-data journals (CDF on only), one writer per kind:
+  // _cdfpre/_cdfdel hold coordinates, _cdfpost update post-images
+  private val journalWriters = mutable.Map.empty[
+    String, org.apache.spark.sql.execution.datasources.OutputWriter]
 
-  private def journalCoord(file: String, pos: Long): Unit = {
-    if (coordWriter == null) {
-      val dir = s"$stage/_cdfpre"
-      val p = new Path(dir)
-      p.getFileSystem(coordConf.value).mkdirs(p)
-      val ctx = new TaskAttemptContextImpl(coordConf.value,
-        new TaskAttemptID(new TaskID(new JobID("graft-cdf", 0),
-          TaskType.MAP, partitionId), taskId.toInt))
-      coordWriter = coordFactory.newInstance(
-        f"$dir/part-$partitionId%05d-$taskId" +
-          coordFactory.getFileExtension(ctx),
-        DvDeltaWrite.CoordSchema, ctx)
+  private def journal(kind: String, row: => InternalRow): Unit =
+    journals.foreach { j =>
+      val (f, c, schema) =
+        if (kind == "_cdfpost") (j.rows._1, j.rows._2, rowSchema)
+        else (j.coords._1, j.coords._2, DvDeltaWrite.CoordSchema)
+      journalWriters.getOrElseUpdate(kind, {
+        val dir = s"$stage/$kind"
+        val p = new Path(dir)
+        p.getFileSystem(c.value).mkdirs(p)
+        val ctx = new TaskAttemptContextImpl(c.value,
+          new TaskAttemptID(new TaskID(new JobID("graft-cdf", 0),
+            TaskType.MAP, partitionId), taskId.toInt))
+        f.newInstance(f"$dir/part-$partitionId%05d-$taskId" +
+          f.getFileExtension(ctx), schema, ctx)
+      }).write(row)
     }
-    coordWriter.write(new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(file), pos)))
-  }
 
-  override def delete(meta: InternalRow, id: InternalRow): Unit = {
+  /** Tombstone the row at `id` = (file, pos), journaling the
+    * coordinates under `kind` when change data is on.
+    */
+  private def tombstone(id: InternalRow, kind: String): Unit = {
     val file = id.getUTF8String(0).toString
     val pos = id.getLong(1)
     if (curFile == null || file != curFile) {
@@ -475,9 +526,24 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
     }
     positions += pos
     posCount += 1
-    deleted += 1
-    if (coordFactory != null) journalCoord(file, pos)
+    journal(kind, new org.apache.spark.sql.catalyst.expressions
+      .GenericInternalRow(Array[Any](
+        org.apache.spark.unsafe.types.UTF8String.fromString(file), pos)))
     if (posCount >= FlushAt) flushDeletes(keepFile = true)
+  }
+
+  override def delete(meta: InternalRow, id: InternalRow): Unit = {
+    tombstone(id, "_cdfdel")
+    deleted += 1
+  }
+
+  /** Old image tombstoned, new image staged like an insert. */
+  override def update(meta: InternalRow, id: InternalRow,
+      row: InternalRow): Unit = {
+    tombstone(id, "_cdfpre")
+    stage(row)
+    journal("_cdfpost", row)
+    updated += 1
   }
 
   private def flushDeletes(keepFile: Boolean = false): Unit = {
@@ -503,22 +569,17 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
   private val stagedFiles = mutable.ArrayBuffer.empty[String]
   private var inserted = 0L
 
-  override def insert(row: InternalRow): Unit = {
+  private def stage(row: InternalRow): Unit = {
     val pv = partIdx.map { i =>
       if (row.isNullAt(i)) null else row.getUTF8String(i).toString
     }
     writers.getOrElseUpdate(pv, openWriter(pv)).write(dataProj(row))
-    inserted += 1
   }
 
-  override def reinsert(meta: InternalRow, row: InternalRow): Unit =
-    insert(row)
-
-  override def update(meta: InternalRow, id: InternalRow,
-      row: InternalRow): Unit =
-    throw new IllegalStateException(
-      "updates are represented as delete+insert; update() must not be " +
-        "called (representUpdateAsDeleteAndInsert=true)")
+  override def insert(row: InternalRow): Unit = {
+    stage(row)
+    inserted += 1
+  }
 
   private def openWriter(pv: Seq[String])
       : org.apache.spark.sql.execution.datasources.OutputWriter = {
@@ -544,9 +605,10 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
     flushDeletes()
     writers.values.foreach(_.close())
     writers.clear()
-    if (coordWriter != null) { coordWriter.close(); coordWriter = null }
+    journalWriters.values.foreach(_.close())
+    journalWriters.clear()
     DvDeltaCommitMessage(stagedFiles.toSeq, touched.toSeq, blobs.toSeq,
-      deleted, inserted)
+      deleted, updated, inserted)
   }
 
   override def abort(): Unit = {
@@ -554,10 +616,10 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
       case _: IOException => ()
     }
     writers.clear()
-    try { if (coordWriter != null) coordWriter.close() } catch {
+    try { journalWriters.values.foreach(_.close()) } catch {
       case _: IOException => ()
     }
-    coordWriter = null
+    journalWriters.clear()
     // staged parquet AND pending blobs are swept with the stage dir
     // by the driver — an aborted task publishes nothing
   }

@@ -50,13 +50,18 @@ class DvAlterSpec extends SparkSpec {
     assert(spark.table(name).filter(col("priority") === 3).count() == 10)
     // time travel: the pre-alter version has no such column
     assert(!DV.readVersion(spark, root, 1L).columns.contains("priority"))
-    // duplicates / NOT NULL / positioning fail loudly
-    intercept[IllegalArgumentException](graft.GraftSql.sql(spark,
-      s"ALTER TABLE $name ADD COLUMNS (priority INT)").collect())
-    intercept[IllegalArgumentException](graft.GraftSql.sql(spark,
-      s"ALTER TABLE $name ADD COLUMNS (hard INT NOT NULL)").collect())
-    intercept[IllegalArgumentException](graft.GraftSql.sql(spark,
-      s"ALTER TABLE $name ADD COLUMNS (early INT FIRST)").collect())
+    // duplicates / NOT NULL / positioning fail loudly: the duplicate
+    // in Spark's own DSv2 ALTER analysis, the others in the catalog,
+    // whose refusal Spark's ALTER exec wraps in a SparkException
+    intercept[org.apache.spark.sql.AnalysisException](graft.GraftSql.sql(
+      spark, s"ALTER TABLE $name ADD COLUMNS (priority INT)").collect())
+    def refused(ddl: String): Unit = {
+      val e = intercept[org.apache.spark.SparkException](
+        graft.GraftSql.sql(spark, ddl).collect())
+      assert(e.getCause.isInstanceOf[IllegalArgumentException], e)
+    }
+    refused(s"ALTER TABLE $name ADD COLUMNS (hard INT NOT NULL)")
+    refused(s"ALTER TABLE $name ADD COLUMNS (early INT FIRST)")
   }
 
   test("CHECK constraints: validated on ADD, enforced on every write " +

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{DeletionVectors => DV, Snapshots}
 
 /** SQL time travel (`VERSION AS OF` / `TIMESTAMP AS OF`) on graft-dv
-  * catalog tables through [[graft.plans.DvTimeTravelRule]] /
-  * [[graft.GraftSql]].
+  * session-catalog names through [[graft.GraftSql]]: the name resolves
+  * to the DSv2 table, whose catalog serves each committed version.
   */
 class DvTimeTravelSpec extends SparkSpec {
 
