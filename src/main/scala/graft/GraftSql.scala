@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, DeleteFromTable, LogicalPlan, MergeIntoTable, UpdateTable}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.plans.{DvAnalyzeRule, DvMaintenanceSql, DvSchemaEvolve, DvSessionNameRule}
+import graft.plans.{DvAnalyzeRule, DvMaintenanceSql, DvSchemaEvolve, DvSessionNameRule, GraftPlans}
 import graft.sources.DvDeltaWrite
 
 /** SQL entry point for sessions the engine does NOT build (the harness
@@ -47,10 +47,16 @@ object GraftSql {
     }
   }
 
-  /** What the extensions' hints-batch rules do to a parsed statement. */
+  /** What the extensions' hints-batch rules do to a parsed statement;
+    * a statement on a session name also gets the scan swap the
+    * extensions inject ([[GraftPlans.ensureDvScan]]).
+    */
   private[graft] def route(spark: SparkSession,
-      parsed: LogicalPlan): LogicalPlan =
-    DvAnalyzeRule(spark)(DvSessionNameRule(spark)(parsed))
+      parsed: LogicalPlan): LogicalPlan = {
+    val named = DvSessionNameRule(spark)(parsed)
+    if (named ne parsed) GraftPlans.ensureDvScan(spark)
+    DvAnalyzeRule(spark)(named)
+  }
 
   /** The counts a graft-dv row-level write posted, as the statement's
     * result; `df` itself for any other DML target.

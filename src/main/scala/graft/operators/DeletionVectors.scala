@@ -3317,6 +3317,20 @@ object DeletionVectors {
       rows: DataFrame): Seq[String] =
     appendCommitted(spark, root, partCols, rows, None, "append")
 
+  /** Rows in the given data files, summed from their parquet footers
+    * on the driver: one metadata read per file, no job.
+    */
+  private[graft] def footerRows(spark: SparkSession,
+      files: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          GraftDvApi.pathOf(p), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** Is there a committed manifest at `root`? (The writer-mode
     * existence check — a data dir without a committed manifest is NOT
     * a table.)

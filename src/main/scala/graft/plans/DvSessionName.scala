@@ -85,7 +85,9 @@ object DvSessionName {
   * (DROP, CREATE, DESCRIBE, RENAME TO) and ANALYZE are left alone:
   * `DROP TABLE t` must only unregister the name, while the catalog's
   * `dropTable` deletes the table root. Streaming reads keep the V1
-  * source.
+  * source. The rule only registers the catalog, where unset;
+  * [[DvScanRule]] comes from [[GraftPlans.install]] or
+  * [[graft.GraftSql.sql]].
   */
 case class DvSessionNameRule(session: SparkSession)
     extends Rule[LogicalPlan] {
@@ -103,7 +105,7 @@ case class DvSessionNameRule(session: SparkSession)
         None
       else DvSessionName.entry(session, ident)
     def v2(root: String): Seq[String] = {
-      GraftPlans.ensureDvCatalog(session)
+      GraftPlans.registerDvCatalog(session)
       Seq(GraftPlans.DvCatalog, root)
     }
     def alter(table: LogicalPlan, orig: LogicalPlan)(

@@ -48,15 +48,22 @@ object GraftPlans {
   val DvCatalog = "graftdv"
 
   /** Idempotent per-session registration of the graft-dv DSv2 catalog
-    * as [[DvCatalog]] (a RUNTIME conf, so sessions the engine did not
-    * build get it too) plus the scan swap ([[ensureDvScan]]), so
-    * catalog reads compile to the direct masked plan.
+    * as [[DvCatalog]] ([[registerDvCatalog]]) plus the scan swap
+    * ([[ensureDvScan]]), so catalog reads compile to the direct
+    * masked plan.
     */
   def ensureDvCatalog(spark: SparkSession): Unit = {
-    val key = s"spark.sql.catalog.$DvCatalog"
-    val cls = classOf[graft.sources.GraftDvCatalog].getName
-    if (!spark.conf.getOption(key).contains(cls)) spark.conf.set(key, cls)
+    registerDvCatalog(spark)
     ensureDvScan(spark)
+  }
+
+  /** Register [[DvCatalog]] unless the session already names one (a
+    * RUNTIME conf, so sessions the engine did not build get it too).
+    */
+  private[graft] def registerDvCatalog(spark: SparkSession): Unit = {
+    val key = s"spark.sql.catalog.$DvCatalog"
+    if (spark.conf.getOption(key).isEmpty)
+      spark.conf.set(key, classOf[graft.sources.GraftDvCatalog].getName)
   }
 
   /** Idempotent per-session install of the DV-table placeholder swap

@@ -612,7 +612,7 @@ private[sources] class DvV1WriteBuilder(table: DvV2Table)
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
   override def build(): Write = new V1Write {
-    // rows written, from the manifest's per-file counts (an
+    // rows written, from the new files' parquet footers (an
     // insert-only MERGE compiles to this append; GraftSql reports it)
     @volatile private var appended = 0L
 
@@ -632,20 +632,17 @@ private[sources] class DvV1WriteBuilder(table: DvV2Table)
           require(partCols.nonEmpty,
             s"graft-dv table at ${table.root} has an unrecoverable " +
               "partition layout — re-create it")
-          val added =
+          val written =
             if (overwrite || truncateFirst) {
               // materialize BEFORE init deletes the root: an
               // INSERT OVERWRITE t SELECT ... FROM t reads the table
               // it is about to re-create
               DV.init(spark, data.localCheckpoint(), table.root,
                 partCols): Unit
-              None
-            } else Some(DV.append(spark, table.root, partCols, data))
-          val live = DV.manifest(spark, table.root)
-          val n = added.fold(live)(fs => live.filter(col("file")
-              .isin(fs: _*)))
-            .agg(org.apache.spark.sql.functions.sum("rows")).head()
-          appended = if (n.isNullAt(0)) 0L else n.getLong(0)
+              spark.read.schema(data.schema)
+                .parquet(DV.dataDir(table.root)).inputFiles.toSeq
+            } else DV.append(spark, table.root, partCols, data)
+          appended = DV.footerRows(spark, written)
         }
       }
   }

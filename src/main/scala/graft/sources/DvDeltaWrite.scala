@@ -33,11 +33,11 @@ import graft.operators.{DeletionVectors => DV, DvBlobs}
   * The contract maps 1:1 onto the layer's storage model:
   *  - row identity is POSITIONAL — `rowId = (__file, __pos)`, the
   *    same metadata-column pair every tombstone rides;
-  *  - an updated row reaches the writer as ONE `update(id, row)`
-  *    call, stored as the tombstone-old-image + append-new-image
-  *    shape of [[DV.upsert]]; keeping the update whole (rather than
-  *    Spark's split delete + reinsert) is what lets change data tell
-  *    a MERGE's update pre-images from its deleted rows;
+  *  - updates are stored as the tombstone-old-image +
+  *    append-new-image shape of [[DV.upsert]]; Spark splits them into
+  *    delete + reinsert, except with change data on, where an updated
+  *    row reaches the writer whole (`update(id, row)`) so change data
+  *    can tell a MERGE's update pre-images from its deleted rows;
   *  - deletes land as per-file delta blobs written FROM THE EXECUTORS
   *    ([[DvBlobs.writeDelta]] — the driver never holds positions),
   *    PENDING under the stage dir until the commit publishes them;
@@ -74,12 +74,15 @@ class DvRowLevelOperation(table: DvV2Table,
     cmd: RowLevelOperation.Command)
     extends RowLevelOperation with SupportsDelta {
 
+  /** Change data on, read once so the row shape and the journals agree. */
+  private val recordChanges = DV.cdfEnabled(SparkSession.active)
+
   override def command(): RowLevelOperation.Command = cmd
 
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column("__file"), Expressions.column("__pos"))
 
-  override def representUpdateAsDeleteAndInsert: Boolean = false
+  override def representUpdateAsDeleteAndInsert: Boolean = !recordChanges
 
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array.empty
@@ -91,19 +94,23 @@ class DvRowLevelOperation(table: DvV2Table,
   override def newWriteBuilder(
       info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DvDeltaWrite(table, cmd, info)
+      override def build(): DeltaWrite =
+        new DvDeltaWrite(table, cmd, info, recordChanges)
     }
 }
 
 private[sources] class DvDeltaWrite(table: DvV2Table,
-    cmd: RowLevelOperation.Command, info: LogicalWriteInfo)
+    cmd: RowLevelOperation.Command, info: LogicalWriteInfo,
+    recordChanges: Boolean)
     extends DeltaWrite with RequiresDistributionAndOrdering {
 
   /** DELETE rows carry only (operation, rowId) — partition columns
     * are not in the plan output, so the delete distribution clusters
-    * by target file alone; insert-carrying commands cluster by
-    * (partition, file) so inserts co-locate by partition (file is
-    * null there) and deletes by file.
+    * by target file alone. Insert-carrying commands cluster by
+    * (partition, file): (re)inserts co-locate by partition (file is
+    * null there) and deletes by file. A whole update (change data on)
+    * clusters by (new partition, old file), so a MERGE with delete
+    * and update actions can write two blobs for one file.
     */
   override def requiredDistribution(): Distribution = {
     val refs: Array[org.apache.spark.sql.connector.expressions.Expression] =
@@ -119,7 +126,7 @@ private[sources] class DvDeltaWrite(table: DvV2Table,
       SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
 
   private lazy val batch =
-    new DvDeltaBatchWrite(table.root, cmd, info.schema())
+    new DvDeltaBatchWrite(table.root, cmd, info.schema(), recordChanges)
 
   override def toBatch: DeltaBatchWrite = batch
 
@@ -190,7 +197,7 @@ private[sources] case class DvDeltaCommitMessage(files: Seq[String],
 
 private[sources] class DvDeltaBatchWrite(root: String,
     cmd: RowLevelOperation.Command,
-    rowSchema: StructType) extends DeltaBatchWrite {
+    rowSchema: StructType, cdfOn: Boolean) extends DeltaBatchWrite {
 
   private def spark = SparkSession.active
 
@@ -204,17 +211,15 @@ private[sources] class DvDeltaBatchWrite(root: String,
   @volatile private[sources] var tombstoned = 0L
   @volatile private[sources] var appended = 0L
 
-  /** Change-data recording (opt-in conf): the writers journal the
-    * coordinates they tombstone under the stage — updated rows under
-    * `_cdfpre`, deleted rows under `_cdfdel` — plus each update's new
-    * image under `_cdfpost`, and commit reconstructs the old images
-    * from the (still present) old files ([[DV.rowsAtCoordinates]]).
-    * Updates surface as update pre/post-image pairs, deletes as
-    * 'delete' retraction rows (keyed to a metadata-only commit when
-    * the statement appends nothing), inserts as plain 'insert' rows.
-    */
-  private def cdfOn = DV.cdfEnabled(spark)
-
+  /* Change-data recording (`cdfOn`): the writers journal the
+   * coordinates they tombstone under the stage — updated rows under
+   * `_cdfpre`, deleted rows under `_cdfdel` — plus each update's new
+   * image under `_cdfpost`, and commit reconstructs the old images
+   * from the (still present) old files ([[DV.rowsAtCoordinates]]).
+   * Updates surface as update pre/post-image pairs, deletes as
+   * 'delete' retraction rows (keyed to a metadata-only commit when
+   * the statement appends nothing), inserts as plain 'insert' rows.
+   */
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
     // writer-feature protocol gate BEFORE anything stages: a stripped
@@ -537,7 +542,7 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
     deleted += 1
   }
 
-  /** Old image tombstoned, new image staged like an insert. */
+  /** Whole update: old image tombstoned, new one staged. */
   override def update(meta: InternalRow, id: InternalRow,
       row: InternalRow): Unit = {
     tombstone(id, "_cdfpre")
@@ -580,6 +585,10 @@ private[sources] class DvDeltaTaskWriter(root: String, stage: String,
     stage(row)
     inserted += 1
   }
+
+  /** A split update's new image, counted with the inserts. */
+  override def reinsert(meta: InternalRow, row: InternalRow): Unit =
+    insert(row)
 
   private def openWriter(pv: Seq[String])
       : org.apache.spark.sql.execution.datasources.OutputWriter = {

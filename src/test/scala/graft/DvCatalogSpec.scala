@@ -79,12 +79,25 @@ class DvCatalogSpec extends SparkSpec {
   test("INSERT INTO appends behind one CAS flip; INSERT OVERWRITE " +
       "re-inits preserving the layout") {
     val (root, t, ev) = fresh()
-    spark.sql(s"INSERT INTO $t SELECT event_id + 5000000, ts, " +
+    // the rows the write node posts (read from the new files' footers)
+    def appendedRows(df: org.apache.spark.sql.DataFrame): Option[Long] =
+      df.queryExecution.commandExecuted match {
+        case c: org.apache.spark.sql.catalyst.plans.logical.CommandResult =>
+          c.commandPhysicalPlan.collectFirst {
+            case p if p.metrics.contains(graft.sources.DvDeltaWrite
+                .AppendedRows) =>
+              p.metrics(graft.sources.DvDeltaWrite.AppendedRows).value
+          }
+        case _ => None
+      }
+    val ins = spark.sql(s"INSERT INTO $t SELECT event_id + 5000000, ts, " +
       s"user_id, event_type, value, props, day FROM $t LIMIT 25")
+    assert(appendedRows(ins).contains(25L))
     assert(spark.sql(s"SELECT * FROM $t").count() == 325)
     assert(DV.history(spark, root).orderBy(desc("version"))
       .select("operation").head().getString(0) == "append")
-    spark.sql(s"INSERT OVERWRITE $t SELECT * FROM $t LIMIT 10")
+    val ow = spark.sql(s"INSERT OVERWRITE $t SELECT * FROM $t LIMIT 10")
+    assert(appendedRows(ow).contains(10L))
     assert(spark.sql(s"SELECT * FROM $t").count() == 10)
     assert(DV.partitionColsOf(spark, root) == Seq("day"))
   }
