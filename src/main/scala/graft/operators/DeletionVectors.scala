@@ -1381,14 +1381,43 @@ object DeletionVectors {
 
   // ---- maintenance claim ---------------------------------------------
 
-  private def claimMaintenance(spark: SparkSession, root: String): Unit = {
-    requireWriterFeatures(spark, root)
-    require(Snapshots.tryExclusiveCreate(spark, maintMarker(root)),
-      s"another maintenance operation (purge/vacuum) holds $root/_maint")
+  /** The one claim primitive: create `_maint`, retrying every 50 ms
+    * for up to `waitMs` (0: one attempt). False if it is still held.
+    */
+  private def tryMaintenanceClaim(spark: SparkSession, root: String,
+      waitMs: Long): Boolean = {
+    val deadline = System.currentTimeMillis() + waitMs
+    while (!Snapshots.tryExclusiveCreate(spark, maintMarker(root))) {
+      if (System.currentTimeMillis() >= deadline) return false
+      Thread.sleep(50L)
+    }
+    true
   }
 
-  private def releaseMaintenance(spark: SparkSession, root: String): Unit =
-    Snapshots.removeMarker(spark, maintMarker(root))
+  /** Run `body` holding the maintenance claim — the one entry point of
+    * every maintenance op. Publish intents replay first: a crashed
+    * delete publish must go fully live before a blob fold renames its
+    * only published blob or a rewrite replaces a file its pending
+    * blobs target, or the next replay would drop the intent with the
+    * DELETE half-applied. Only vacuum's dry run, which must change
+    * nothing, skips the replay. With `ifBusy` the claim is
+    * opportunistic (the streaming auto-maintenance slots, which run
+    * right after a gated write): a held claim returns `ifBusy` at once
+    * so ingest never blocks on maintenance, and the next batch
+    * retries.
+    */
+  private def withMaintenance[T](spark: SparkSession, root: String,
+      dryRun: Boolean = false, ifBusy: Option[T] = None)(body: => T): T = {
+    if (ifBusy.isEmpty) requireWriterFeatures(spark, root)
+    val claimed = tryMaintenanceClaim(spark, root, 0L)
+    if (!claimed && ifBusy.isDefined) return ifBusy.get
+    require(claimed,
+      s"another maintenance operation (purge/vacuum) holds $root/_maint")
+    try {
+      if (!dryRun) DvBlobs.replayIntents(root): Unit
+      body
+    } finally releaseMaintenanceClaim(spark, root)
+  }
 
   /** Block until no maintenance claim is held — the delete-side fence
     * (see the class doc's concurrency model). Times out loudly rather
@@ -1470,9 +1499,9 @@ object DeletionVectors {
     firstPass // unreachable
   }
 
-  /** One tombstone-write pass shared by [[markWhere]]'s fence loop and
-    * [[markCoordsUnderClaim]]: groups the marked (file, pos) rows per
-    * file and writes one delta blob per file from the executors.
+  /** One tombstone-write pass of [[markWhere]]'s fence loop: groups
+    * the marked (file, pos) rows per file and writes one delta blob
+    * per file from the executors.
     * Returns (rows marked, files touched).
     */
   private def writeMarks(spark: SparkSession, root: String,
@@ -1511,17 +1540,8 @@ object DeletionVectors {
     * its whole run (mutual exclusion with vacuum; the fence deletes
     * wait on). Threshold math reads NO tombstone data — per-file
     * counts come from delta blob NAMES, listed in parallel on the
-    * executors.
-    *
-    * Two-phase and crash-safe: kept rows of hot files are staged
-    * under the table root, MOVED into the data partition dirs
-    * (present but uncommitted = invisible), then one CAS publish
-    * flips the live set. A crash leaves orphan replacement files
-    * (vacuum fodder after the grace window), never a doubled or
-    * missing row. A delete racing the staging scan is caught by the
-    * per-file delta-signature re-check and forces a restage; a CDC
-    * upsert committing mid-purge makes the publish rebase onto the
-    * new manifest (upserts only add files).
+    * executors. The rewrite and its crash-safe commit are
+    * [[rewriteFiles]].
     *
     * @param onBeforeCommit test-only failpoint between staging+move
     *        and the CAS publish (crash/interleave simulation).
@@ -1546,111 +1566,103 @@ object DeletionVectors {
   def purge(spark: SparkSession, root: String, partCols: Seq[String],
       maxDeletedFraction: Double,
       onBeforeCommit: () => Unit,
-      scope: Option[String] = None): Seq[String] = {
-    claimMaintenance(spark, root)
-    try {
-      // finish a crashed delete publish first: a hot file rewritten
-      // before its pending tombstones go live would keep their rows
-      DvBlobs.replayIntents(root): Unit
+      scope: Option[String] = None): Seq[String] =
+    withMaintenance(spark, root) {
       import spark.implicits._
-      var sigAttempts = 0
-      var result: Seq[String] = null
-      while (result == null) {
-        val inScope = scope.map(scopedFiles(spark, root, partCols, _))
-        val hot = {
-          // old-layout files (mid-evolution) belong to migrateLayout,
-          // whose rewrite re-partitions them; purge touches only the
-          // current generation so its staged write stays layout-true
-          val live = manifest(spark, root).select("file", "rows")
-            .as[(String, Long)].collect().toSeq
-            .filter(fr => GraftDvApi.parsePartitions(fr._1)
-              .map(_._1) == partCols)
-            .filter(fr => inScope.forall(_.contains(fr._1)))
-          val counts = spark.createDataset(live.map(_._1))
-            .map(f => (f, DvBlobs.tombstoneCount(root, f)))
-            .collect().toMap
-          live.filter { case (f, rows) =>
-            counts.getOrElse(f, 0L) > rows * maxDeletedFraction
-          }.map(_._1)
-        }
-        if (hot.isEmpty) return Seq.empty
+      val inScope = scope.map(scopedFiles(spark, root, partCols, _))
+      // old-layout files (mid-evolution) belong to migrateLayout,
+      // whose rewrite re-partitions them; purge touches only the
+      // current generation so its staged write stays layout-true
+      val live = manifest(spark, root).select("file", "rows")
+        .as[(String, Long)].collect().toSeq
+        .filter(fr => GraftDvApi.parsePartitions(fr._1)
+          .map(_._1) == partCols)
+        .filter(fr => inScope.forall(_.contains(fr._1)))
+      val counts = spark.createDataset(live.map(_._1))
+        .map(f => (f, DvBlobs.tombstoneCount(root, f)))
+        .collect().toMap
+      val hot = live.filter { case (f, rows) =>
+        counts.getOrElse(f, 0L) > rows * maxDeletedFraction
+      }.map(_._1)
+      rewriteFiles(spark, root, "purge", "purged", partCols, hot,
+        onBeforeCommit)()
+    }
 
-        // per-file delta signature BEFORE the staging scan: if a
-        // delete lands during staging, the post-move re-check differs
-        // and we restage (bounded; the delete-side fence covers the
-        // unbounded-churn case)
-        val sig0 = hot.map(f => f -> DvBlobs.signature(root, f)).toMap
-
-        val f = hfs(spark, root)
-        val stage = s"$root/_purge_stage"
-        f.delete(new Path(stage), true)
-        // staged under the CURRENT schema: a purge after evolution
-        // materializes the null-filled columns into the replacements
-        toPhysicalCols(rewriteSource(spark, root,
-            entriesOf(spark, hot), currentMeta(spark, root)),
-            currentMeta(spark, root))
-          .write.mode("overwrite").partitionBy(partCols: _*).parquet(stage)
-        val moved = moveStaged(spark, root, stage, "purged")
-
-        val sigNow = hot.map(f0 => f0 -> DvBlobs.signature(root, f0)).toMap
-        if (sigNow != sig0) {
-          // a delete raced the staging scan: the staged replacements'
-          // masks lack its victims. NEVER commit a stale stage —
-          // committing would rest correctness on the racing deleter
-          // surviving to run its post-write fence (a deleter that
-          // crashes after its deltas land but before fencing would
-          // have its delete silently resurrected). Restage (bounded),
-          // then fail loudly like delete's retry cap.
-          require(sigAttempts < 3,
-            s"purge restaged 3 times and a concurrent delete raced " +
-              s"each attempt on $root — delete churn is pathological; " +
-              "rerun purge when the delete storm subsides " +
-              "(abandoned staged files are vacuum fodder)")
-          sigAttempts += 1 // abandoned moved files = vacuum fodder
-        } else {
-          val movedStats =
-            if (moved.isEmpty) emptyStatsFrame(spark)
-            // manifest-fed relation, not parquet(strings): explicit
-            // path strings re-encode escaped partition segments
-            else perFileStats(relationOver(spark, root,
-              entriesOf(spark, moved), currentMeta(spark, root)),
-              currentMeta(spark, root).map(_.statsSchema)
-                .getOrElse(new org.apache.spark.sql.types.StructType()))
-          onBeforeCommit()
-          // CAS loop: a CDC upsert committing mid-purge only ADDS
-          // files — rebase the (live − hot) ∪ replacements math onto
-          // whatever the latest manifest now says
-          var committed = false
-          var casAttempts = 0
-          while (!committed) {
-            casAttempts = boundedCasRetry(root, casAttempts)
-            val base = Snapshots.latestVersion(
-              spark, manifestTable(root)).get
-            val latest = Snapshots.readVersion(
-              spark, manifestTable(root), base)
-            // anti-join, not isin: hot can approach the full file
-            // count after a broad delete — an IN-list would be a
-            // manifest-sized plan literal (the refreshIndex rule)
-            val hotDf = spark.createDataset(hot)(
-              org.apache.spark.sql.Encoders.STRING).toDF("file")
-            // no broadcast HINT on the file list: hot approaches the
-            // full file count after a broad delete, and at ~10M files
-            // a forced broadcast is GB-scale — AQE picks BHJ while
-            // small and the shuffle form past the threshold
-            // (round-11: the same treatment the read path got)
-            val next = withSentinelOp(ensureMetaCols(
-                latest.join(hotDf, Seq("file"), "left_anti"))
-              .unionByName(ensureMetaCols(
-                movedStats.withColumn("cdc_batch",
-                  lit(lastCdcBatch(spark, root))))), "purge")
-            committed = Snapshots.publishCas(
-              spark, manifestTable(root), base, next)
-          }
-          result = hot
-        }
+  /** The staged-rewrite commit of every file-rewriting maintenance op
+    * (purge, pack, ZORDER, layout migration) — Delta's "rewrite
+    * files" commit. The caller holds the maintenance claim. The
+    * masked rows of `victims`, under the CURRENT schema (a rewrite
+    * after evolution materializes the null-filled columns), pass
+    * through `stageRows` (the op's binning or clustering), are staged
+    * under `_<op>_stage`, then MOVED into the data partition dirs
+    * under `<prefix>-` names (present but uncommitted = invisible).
+    * One CAS publish of (latest − victims) ∪ moved, with the sentinel
+    * `op` and then `adjustNext` applied, flips the live set. A crash
+    * leaves orphan moved files (vacuum fodder after the grace
+    * window), never a doubled or missing row.
+    *
+    * @return `victims` (empty: nothing is staged or committed)
+    */
+  private def rewriteFiles(spark: SparkSession, root: String, op: String,
+      prefix: String, partCols: Seq[String], victims: Seq[String],
+      onBeforeCommit: () => Unit,
+      adjustNext: DataFrame => DataFrame = identity)(
+      stageRows: DataFrame => DataFrame = identity): Seq[String] = {
+    val stage = s"$root/_${op}_stage"
+    @scala.annotation.tailrec
+    def attempt(sigAttempts: Int): Unit = {
+      // per-file delta signature BEFORE the staging scan: if a delete
+      // lands during staging, the post-move re-check differs and we
+      // restage (bounded; the delete-side fence covers the
+      // unbounded-churn case)
+      val sig0 = victims.map(f => f -> DvBlobs.signature(root, f)).toMap
+      val meta = currentMeta(spark, root)
+      hfs(spark, root).delete(new Path(stage), true)
+      toPhysicalCols(stageRows(rewriteSource(spark, root,
+          entriesOf(spark, victims), meta)), meta)
+        .write.mode("overwrite").partitionBy(partCols: _*).parquet(stage)
+      val moved = moveStaged(spark, root, stage, prefix)
+      if (victims.map(f => f -> DvBlobs.signature(root, f)).toMap != sig0) {
+        // a delete raced the staging scan: the staged replacements'
+        // masks lack its victims. NEVER commit a stale stage —
+        // committing would rest correctness on the racing deleter
+        // surviving to run its post-write fence (a deleter that
+        // crashes after its deltas land but before fencing would have
+        // its delete silently resurrected). Restage (bounded), then
+        // fail loudly like delete's retry cap.
+        require(sigAttempts < 3,
+          s"$op restaged 3 times and a concurrent delete raced each " +
+            s"attempt on $root — rerun when the delete storm subsides " +
+            "(abandoned staged files are vacuum fodder)")
+        attempt(sigAttempts + 1)
+      } else {
+        val movedStats =
+          if (moved.isEmpty) emptyStatsFrame(spark)
+          // manifest-fed relation, not parquet(strings): explicit
+          // path strings re-encode escaped partition segments
+          else perFileStats(relationOver(spark, root,
+            entriesOf(spark, moved), meta), meta.map(_.statsSchema)
+            .getOrElse(new org.apache.spark.sql.types.StructType()))
+        onBeforeCommit()
+        // anti-join, not isin, and no broadcast HINT: victims can
+        // approach the full file count after a broad delete — an
+        // IN-list would be a manifest-sized plan literal, and at ~10M
+        // files a forced broadcast is GB-scale (AQE picks BHJ while
+        // small and the shuffle form past the threshold)
+        val vicDf = spark.createDataset(victims)(
+          org.apache.spark.sql.Encoders.STRING).toDF("file")
+        // the CAS loop REBASES: an append/upsert landing mid-rewrite
+        // only ADDS files — (latest − victims) ∪ replacements keeps
+        // the racer's files live
+        sentinelFlip(spark, root, op) { (_, latest) =>
+          adjustNext(latest.join(vicDf, Seq("file"), "left_anti")
+            .unionByName(ensureMetaCols(movedStats.withColumn(
+              "cdc_batch", lit(lastCdcBatch(spark, root))))))
+        }: Unit
       }
-      result
-    } finally releaseMaintenance(spark, root)
+    }
+    if (victims.nonEmpty) attempt(0)
+    victims
   }
 
   /** RESTORE the table to committed manifest version `v`: publish a
@@ -1699,8 +1711,7 @@ object DeletionVectors {
     require(Snapshots.committedVersions(spark, mt).contains(v),
       s"cannot restore $root to version $v: not a committed manifest " +
         "version (never committed, or vacuumed from the log)")
-    claimMaintenance(spark, root)
-    try {
+    withMaintenance(spark, root) {
       // files referenced by v but absent from the CURRENT live set may
       // have been vacuumed — verify existence BEFORE committing a
       // manifest that would point at missing data. Only the difference
@@ -1733,21 +1744,23 @@ object DeletionVectors {
       // window, and silently retrying onto it would drop that commit
       // from the live set. Fail loudly instead; the caller re-runs.
       val base = Snapshots.latestVersion(spark, mt).get
-      if (base == v) return v
-      val hw = lastCdcBatch(spark, root)
-      val next = withSentinelOp(
-          ensureMetaCols(Snapshots.readVersion(spark, mt, v)), "restore")
-        .withColumn("cdc_batch", when(col("file") === Sentinel,
-          greatest(col("cdc_batch"), lit(hw))).otherwise(col("cdc_batch")))
-      onBeforeCas()
-      if (!Snapshots.publishCas(spark, mt, base, next))
-        throw new java.util.ConcurrentModificationException(
-          s"RESTORE of $root to version $v aborted: a concurrent " +
-            s"commit landed after version $base during the restore " +
-            "window — nothing was changed; re-run the restore to " +
-            "supersede it")
-      base + 1
-    } finally releaseMaintenance(spark, root)
+      if (base == v) v
+      else {
+        val hw = lastCdcBatch(spark, root)
+        val next = withSentinelOp(
+            ensureMetaCols(Snapshots.readVersion(spark, mt, v)), "restore")
+          .withColumn("cdc_batch", when(col("file") === Sentinel,
+            greatest(col("cdc_batch"), lit(hw))).otherwise(col("cdc_batch")))
+        onBeforeCas()
+        if (!Snapshots.publishCas(spark, mt, base, next))
+          throw new java.util.ConcurrentModificationException(
+            s"RESTORE of $root to version $v aborted: a concurrent " +
+              s"commit landed after version $base during the restore " +
+              "window — nothing was changed; re-run the restore to " +
+              "supersede it")
+        base + 1
+      }
+    }
   }
 
   /** Partition scope for bounded maintenance (`OPTIMIZE t WHERE
@@ -1782,10 +1795,8 @@ object DeletionVectors {
   /** Bin-pack SMALL live files: within each partition directory,
     * rewrite every live file under `minBytes` (when two or more share
     * the dir — a single sliver has nothing to merge with) into one
-    * replacement per dir, behind the purge commit discipline
-    * (maintenance claim, per-file delta-signature restage on racing
-    * deletes, CAS flip; masks fold into the replacements; dead
-    * originals are vacuum fodder).
+    * replacement per dir, behind [[rewriteFiles]] (masks fold into
+    * the replacements; dead originals are vacuum fodder).
     *
     * This is the file-COUNT half of OPTIMIZE that [[purge]]'s
     * tombstone-fraction rule never fires on: a CDC trickle appends a
@@ -1802,113 +1813,51 @@ object DeletionVectors {
   def compactSmallFiles(spark: SparkSession, root: String,
       minBytes: Long = 64L * 1024 * 1024,
       onBeforeCommit: () => Unit = () => (),
-      scope: Option[String] = None,
-      opportunistic: Boolean = false): Seq[String] = {
-    // opportunistic callers (the streaming auto-pack slot) skip when
-    // maintenance is busy instead of failing — ingest never blocks
-    if (opportunistic) {
-      if (!Snapshots.tryExclusiveCreate(spark, maintMarker(root)))
-        return Seq.empty
-    } else claimMaintenance(spark, root)
-    try {
-      DvBlobs.replayIntents(root): Unit // see purge
-      val partCols = partitionColsOf(spark, root)
-      require(partCols.nonEmpty,
-        s"graft-dv table at $root has no recoverable partition layout")
-      var sigAttempts = 0
-      var result: Seq[String] = null
-      while (result == null) {
-        val inScope = scope.map(scopedFiles(spark, root, partCols, _))
-        val victims = liveEntries(spark, root)
-          .filter(e => GraftDvApi.parsePartitions(e.path)
-            .map(_._1) == partCols) // migrateLayout owns old layouts
-          .filter(e => inScope.forall(_.contains(e.path)))
-          .filter(_.bytes < minBytes)
-          .groupBy(_.partValues).filter(_._2.size >= 2)
-          .values.flatten.map(_.path).toSeq
-        if (victims.isEmpty) return Seq.empty
-        val sig0 = victims.map(f0 => f0 -> DvBlobs.signature(root, f0)).toMap
+      scope: Option[String] = None): Seq[String] =
+    withMaintenance(spark, root)(
+      packSmallFiles(spark, root, minBytes, onBeforeCommit, scope))
 
-        val meta = currentMeta(spark, root)
-        val f = hfs(spark, root)
-        val stage = s"$root/_compact_stage"
-        f.delete(new Path(stage), true)
-        // per-group bin counts so no replacement exceeds the split
-        // target even when a dir holds many slivers (the Compaction
-        // broadcast-plan shape: the plan frame is partitions x 1 int)
-        val target = math.max(1L,
-          spark.sessionState.conf.filesMaxPartitionBytes)
-        val vicSet = victims.toSet
-        val binsOf = liveEntries(spark, root)
-          .filter(e => vicSet.contains(e.path))
-          .groupBy(_.partValues)
-          .map { case (pv, es) =>
-            pv -> math.max(1, (es.map(_.bytes).sum / target).toInt + 1) }
-        val planRows = binsOf.toSeq.map { case (pv, b) =>
-          org.apache.spark.sql.Row.fromSeq(pv :+ b) }
-        val planDf = spark.createDataFrame(
-          new java.util.ArrayList(planRows.asJava),
-          org.apache.spark.sql.types.StructType(
-            partCols.map(c => org.apache.spark.sql.types.StructField(c,
-              org.apache.spark.sql.types.StringType)) :+
-              org.apache.spark.sql.types.StructField("__bins",
-                org.apache.spark.sql.types.IntegerType)))
-        val scan = rewriteSource(spark, root,
-          entriesOf(spark, victims), meta)
-        val dataCols = scan.columns.filterNot(partCols.contains).toSeq
-        val totalBins = binsOf.values.sum
-        toPhysicalCols(scan.join(broadcast(planDf), partCols)
-          .withColumn("__bin",
-            pmod(hash(dataCols.map(col): _*), col("__bins")))
-          .repartition(math.max(1, totalBins),
-            (partCols.map(col) :+ col("__bin")): _*)
-          .drop("__bin", "__bins"), currentMeta(spark, root))
-          .write.mode("overwrite").partitionBy(partCols: _*).parquet(stage)
-        val moved = moveStaged(spark, root, stage, "packed")
-
-        val sigNow = victims.map(f0 =>
-          f0 -> DvBlobs.signature(root, f0)).toMap
-        if (sigNow != sig0) {
-          require(sigAttempts < 3,
-            s"small-file compaction restaged 3 times and a concurrent " +
-              s"delete raced each attempt on $root — rerun when the " +
-              "delete storm subsides (abandoned staged files are " +
-              "vacuum fodder)")
-          sigAttempts += 1
-        } else {
-          val statsSchema = meta.map(_.statsSchema)
-            .getOrElse(new org.apache.spark.sql.types.StructType())
-          val movedStats =
-            if (moved.isEmpty) emptyStatsFrame(spark)
-            else perFileStats(relationOver(spark, root,
-              entriesOf(spark, moved), meta), statsSchema)
-          onBeforeCommit()
-          // CAS loop REBASES like purge's: an append/upsert landing
-          // mid-pack only ADDS files — (latest − victims) ∪
-          // replacements keeps the racer's files live
-          var committed = false
-          var casAttempts = 0
-          while (!committed) {
-            casAttempts = boundedCasRetry(root, casAttempts)
-            val base = Snapshots.latestVersion(
-              spark, manifestTable(root)).get
-            val latest = Snapshots.readVersion(
-              spark, manifestTable(root), base)
-            val vicDf = spark.createDataset(victims)(
-              org.apache.spark.sql.Encoders.STRING).toDF("file")
-            val next = withSentinelOp(ensureMetaCols(
-                latest.join(vicDf, Seq("file"), "left_anti"))
-              .unionByName(ensureMetaCols(
-                movedStats.withColumn("cdc_batch",
-                  lit(lastCdcBatch(spark, root))))), "compact")
-            committed = Snapshots.publishCas(
-              spark, manifestTable(root), base, next)
-          }
-          result = victims
-        }
-      }
-      result
-    } finally releaseMaintenance(spark, root)
+  /** [[compactSmallFiles]]' body; the caller holds the claim. */
+  private def packSmallFiles(spark: SparkSession, root: String,
+      minBytes: Long, onBeforeCommit: () => Unit,
+      scope: Option[String]): Seq[String] = {
+    val partCols = partitionColsOf(spark, root)
+    require(partCols.nonEmpty,
+      s"graft-dv table at $root has no recoverable partition layout")
+    val inScope = scope.map(scopedFiles(spark, root, partCols, _))
+    val groups = liveEntries(spark, root)
+      .filter(e => GraftDvApi.parsePartitions(e.path)
+        .map(_._1) == partCols) // migrateLayout owns old layouts
+      .filter(e => inScope.forall(_.contains(e.path)))
+      .filter(_.bytes < minBytes)
+      .groupBy(_.partValues).filter(_._2.size >= 2)
+    val victims = groups.values.flatten.map(_.path).toSeq
+    // per-group bin counts so no replacement exceeds the split
+    // target even when a dir holds many slivers (the Compaction
+    // broadcast-plan shape: the plan frame is partitions x 1 int)
+    val target = math.max(1L,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    val binsOf = groups.map { case (pv, es) =>
+      pv -> math.max(1, (es.map(_.bytes).sum / target).toInt + 1) }
+    rewriteFiles(spark, root, "compact", "packed", partCols, victims,
+        onBeforeCommit) { scan =>
+      val planRows = binsOf.toSeq.map { case (pv, b) =>
+        org.apache.spark.sql.Row.fromSeq(pv :+ b) }
+      val planDf = spark.createDataFrame(
+        new java.util.ArrayList(planRows.asJava),
+        org.apache.spark.sql.types.StructType(
+          partCols.map(c => org.apache.spark.sql.types.StructField(c,
+            org.apache.spark.sql.types.StringType)) :+
+            org.apache.spark.sql.types.StructField("__bins",
+              org.apache.spark.sql.types.IntegerType)))
+      val dataCols = scan.columns.filterNot(partCols.contains).toSeq
+      scan.join(broadcast(planDf), partCols)
+        .withColumn("__bin",
+          pmod(hash(dataCols.map(col): _*), col("__bins")))
+        .repartition(math.max(1, binsOf.values.sum),
+          (partCols.map(col) :+ col("__bin")): _*)
+        .drop("__bin", "__bins")
+    }
   }
 
   /** SHALLOW CLONE: create a NEW table at `dstRoot` whose v1 manifest
@@ -2271,118 +2220,61 @@ object DeletionVectors {
     * the table and get the lazy single-layout read path back).
     * `scope`: a predicate over each old file's OWN partition columns
     * (evaluated per layout generation against the parsed path
-    * values), so migration is O(scoped files). Runs behind the full
-    * pack discipline: maintenance claim, per-file delta-signature
-    * restage on racing deletes, masks folding into the replacements,
-    * one CAS flip — which also CLEARS the evolution flag when no
-    * old-generation file remains live.
+    * values), so migration is O(scoped files). Runs behind
+    * [[rewriteFiles]], whose one CAS flip also CLEARS the evolution
+    * flag when no old-generation file remains live.
     *
     * @return the migrated (replaced) file paths
     */
   def migrateLayout(spark: SparkSession, root: String,
       scope: Option[String] = None,
-      onBeforeCommit: () => Unit = () => ()): Seq[String] = {
-    claimMaintenance(spark, root)
-    try {
-      DvBlobs.replayIntents(root): Unit // see purge
+      onBeforeCommit: () => Unit = () => ()): Seq[String] =
+    withMaintenance(spark, root) {
       val partCols = partitionColsOf(spark, root)
       val meta = currentMeta(spark, root).getOrElse(
         throw new IllegalArgumentException(
           s"graft-dv table at $root has a legacy manifest — " +
             "migration needs schema-in-log"))
-      var sigAttempts = 0
-      var result: Seq[String] = null
-      while (result == null) {
-        val old = liveEntries(spark, root).filter(e =>
-          GraftDvApi.parsePartitions(e.path).map(_._1) != partCols)
-        val victims = scope match {
-          case None => old.map(_.path)
-          case Some(where) =>
-            // evaluate per OLD layout generation over its own columns
-            old.groupBy(e =>
-                GraftDvApi.parsePartitions(e.path).map(_._1))
-              .toSeq.flatMap { case (layout, es) =>
-                val schema = org.apache.spark.sql.types.StructType(
-                  layout.map(c => org.apache.spark.sql.types.StructField(
-                    c, org.apache.spark.sql.types.StringType)))
-                val pv = es.map(_.partValues).distinct
-                val keep = spark.createDataFrame(
-                    new java.util.ArrayList(pv.map(v =>
-                      org.apache.spark.sql.Row.fromSeq(v)).asJava), schema)
-                  .filter(expr(where)).collect()
-                  .map(_.toSeq.map(String.valueOf)).toSet
-                es.filter(e => keep.contains(
-                  e.partValues.map(String.valueOf))).map(_.path)
-              }
-        }
-        if (victims.isEmpty) {
-          // nothing (left) to migrate: clear the evolution flag when
-          // the WHOLE table is current-layout again
-          if (old.isEmpty && meta.oldLayouts.nonEmpty)
-            sentinelFlip(spark, root, "migrate") { (_, latest) =>
-              latest.withColumn("old_layouts",
-                when(col("file") === Sentinel,
-                  lit(null).cast("string"))
-                .otherwise(col("old_layouts")))
-            }: Unit
-          return Seq.empty
-        }
-        val sig0 = victims.map(f0 =>
-          f0 -> DvBlobs.signature(root, f0)).toMap
-
-        val f = hfs(spark, root)
-        val stage = s"$root/_migrate_stage"
-        f.delete(new Path(stage), true)
-        toPhysicalCols(
-          rewriteSource(spark, root, entriesOf(spark, victims),
-            Some(meta)), Some(meta))
-          .write.mode("overwrite").partitionBy(partCols: _*)
-          .parquet(stage)
-        val moved = moveStaged(spark, root, stage, "migrated")
-
-        val sigNow = victims.map(f0 =>
-          f0 -> DvBlobs.signature(root, f0)).toMap
-        if (sigNow != sig0) {
-          require(sigAttempts < 3,
-            s"layout migration restaged 3 times on $root — rerun when " +
-              "the delete storm subsides (staged files are vacuum fodder)")
-          sigAttempts += 1
-        } else {
-          val movedStats =
-            if (moved.isEmpty) emptyStatsFrame(spark)
-            else perFileStats(relationOver(spark, root,
-              entriesOf(spark, moved), Some(meta)), meta.statsSchema)
-          onBeforeCommit()
-          val clearsFlag = scope.isEmpty ||
-            old.map(_.path).forall(victims.contains)
-          var committed = false
-          var casAttempts = 0
-          while (!committed) {
-            casAttempts = boundedCasRetry(root, casAttempts)
-            val base = Snapshots.latestVersion(
-              spark, manifestTable(root)).get
-            val latest = Snapshots.readVersion(
-              spark, manifestTable(root), base)
-            val vicDf = spark.createDataset(victims)(
-              org.apache.spark.sql.Encoders.STRING).toDF("file")
-            var next = withSentinelOp(ensureMetaCols(
-                latest.join(vicDf, Seq("file"), "left_anti"))
-              .unionByName(ensureMetaCols(
-                movedStats.withColumn("cdc_batch",
-                  lit(lastCdcBatch(spark, root))))), "migrate")
-            if (clearsFlag)
-              next = next.withColumn("old_layouts",
-                when(col("file") === Sentinel, lit(null).cast("string"))
-                .otherwise(col("old_layouts")))
-            committed = Snapshots.publishCas(
-              spark, manifestTable(root), base, next)
-          }
-          result = victims
-        }
+      val old = liveEntries(spark, root).filter(e =>
+        GraftDvApi.parsePartitions(e.path).map(_._1) != partCols)
+      val victims = scope match {
+        case None => old.map(_.path)
+        case Some(where) =>
+          // evaluate per OLD layout generation over its own columns
+          old.groupBy(e =>
+              GraftDvApi.parsePartitions(e.path).map(_._1))
+            .toSeq.flatMap { case (layout, es) =>
+              val schema = org.apache.spark.sql.types.StructType(
+                layout.map(c => org.apache.spark.sql.types.StructField(
+                  c, org.apache.spark.sql.types.StringType)))
+              val pv = es.map(_.partValues).distinct
+              val keep = spark.createDataFrame(
+                  new java.util.ArrayList(pv.map(v =>
+                    org.apache.spark.sql.Row.fromSeq(v)).asJava), schema)
+                .filter(expr(where)).collect()
+                .map(_.toSeq.map(String.valueOf)).toSet
+              es.filter(e => keep.contains(
+                e.partValues.map(String.valueOf))).map(_.path)
+            }
       }
-      result
-    } finally releaseMaintenance(spark, root)
-  }
+      val clearFlag: DataFrame => DataFrame =
+        _.withColumn("old_layouts", when(col("file") === Sentinel,
+          lit(null).cast("string")).otherwise(col("old_layouts")))
+      if (victims.isEmpty) {
+        // nothing (left) to migrate: clear the evolution flag when
+        // the WHOLE table is current-layout again
+        if (old.isEmpty && meta.oldLayouts.nonEmpty)
+          sentinelFlip(spark, root, "migrate")((_, latest) =>
+            clearFlag(latest)): Unit
+        Seq.empty
+      } else {
+        val clearsFlag = scope.isEmpty ||
+          old.map(_.path).forall(victims.contains)
+        rewriteFiles(spark, root, "migrate", "migrated", partCols,
+          victims, onBeforeCommit,
+          if (clearsFlag) clearFlag else identity)()
+      }
+    }
 
   /** `ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)`: record a
     * CHECK constraint in the sentinel (enforced on every mutating
@@ -2454,10 +2346,8 @@ object DeletionVectors {
     * bounding box in z-space and the MANIFEST's per-file min/max stats
     * (plus parquet row-group stats) prune box predicates on EITHER
     * dimension. The rewrite materializes the current mask (tombstones
-    * fold into the replacements, like [[purge]]) and commits behind
-    * one CAS flip; racing deletes are caught by the same per-file
-    * delta-signature restage discipline purge uses, and the dead
-    * originals are vacuum fodder.
+    * fold into the replacements) and commits behind
+    * [[rewriteFiles]]; the dead originals are vacuum fodder.
     *
     * This is the expensive, explicitly-requested layout operation
     * (Delta's OPTIMIZE ZORDER): a full rewrite of the live bytes —
@@ -2482,9 +2372,7 @@ object DeletionVectors {
       incremental: Boolean = false): Seq[String] = {
     require(zCols.nonEmpty && zCols.size <= 2,
       s"ZORDER BY takes 1 or 2 columns; got ${zCols.mkString(", ")}")
-    claimMaintenance(spark, root)
-    try {
-      DvBlobs.replayIntents(root): Unit // see purge
+    withMaintenance(spark, root) {
       val partCols = partitionColsOf(spark, root)
       require(partCols.nonEmpty,
         s"graft-dv table at $root has no recoverable partition layout")
@@ -2510,26 +2398,31 @@ object DeletionVectors {
               "(a scoped ZORDER under a different key invalidates the " +
               "pin) — run a full OPTIMIZE ... ZORDER BY first")
       }
-      var sigAttempts = 0
-      var result: Seq[String] = null
-      while (result == null) {
-        val inScope = scope.map(scopedFiles(spark, root, partCols, _))
-        val live = liveEntries(spark, root)
-          .filter(e => GraftDvApi.parsePartitions(e.path)
-            .map(_._1) == partCols) // migrateLayout owns old layouts
-          .filter(e => inScope.forall(_.contains(e.path)))
-          .filter(e => !incremental ||
-            !new Path(e.path).getName.startsWith("zordered-"))
-          .map(_.path)
-        if (live.isEmpty) {
-          pinOrInvalidateZorderCols(spark, root, zCols, scope)
-          return Seq.empty
-        }
-        val sig0 = live.map(f0 => f0 -> DvBlobs.signature(root, f0)).toMap
-
-        val meta = currentMeta(spark, root)
-        val scan = rewriteSource(spark, root, entriesOf(spark, live),
-          meta)
+      val inScope = scope.map(scopedFiles(spark, root, partCols, _))
+      val live = liveEntries(spark, root)
+        .filter(e => GraftDvApi.parsePartitions(e.path)
+          .map(_._1) == partCols) // migrateLayout owns old layouts
+        .filter(e => inScope.forall(_.contains(e.path)))
+        .filter(e => !incremental ||
+          !new Path(e.path).getName.startsWith("zordered-"))
+        .map(_.path)
+      // size the range shuffle by LIVE BYTES, not the session
+      // shuffle default: a 100 TB rewrite needs bytes/
+      // maxPartitionBytes tasks or every task spills, and a layout
+      // rewrite must produce the same file granularity whatever
+      // parallelism the session happens to run at (the determinism
+      // probe re-runs under a different thread count). The floor of
+      // 16 buckets keeps z-range SPLITTING — the whole point of the
+      // op — even on tables small enough to fit one task.
+      val liveBytes = liveEntries(spark, root)
+        .filter(e => inScope.forall(_.contains(e.path)))
+        .map(_.bytes).sum
+      val targetBytes = math.max(1L,
+        spark.sessionState.conf.filesMaxPartitionBytes)
+      val shuffleN = math.max(16, math.min(
+        (liveBytes / targetBytes).toInt + 1, 1 << 20))
+      val rewritten = rewriteFiles(spark, root, "zorder", "zordered",
+          partCols, live, onBeforeCommit) { scan =>
         // range-normalize each z column over the LIVE rows (one tiny
         // stats pass — the same pre-pass Delta's ZORDER does), then
         // interleave; single-column form is a plain range cluster
@@ -2545,78 +2438,16 @@ object DeletionVectors {
             lit(lv(2 * i + 1))) }
         val z = if (norm.size == 2) Compaction.morton2(norm(0), norm(1))
           else norm.head
-        val f = hfs(spark, root)
-        val stage = s"$root/_zorder_stage"
-        f.delete(new Path(stage), true)
-        // size the range shuffle by LIVE BYTES, not the session
-        // shuffle default: a 100 TB rewrite needs bytes/
-        // maxPartitionBytes tasks or every task spills, and a layout
-        // rewrite must produce the same file granularity whatever
-        // parallelism the session happens to run at (the determinism
-        // probe re-runs under a different thread count). The floor of
-        // 16 buckets keeps z-range SPLITTING — the whole point of the
-        // op — even on tables small enough to fit one task.
-        val liveBytes = liveEntries(spark, root)
-          .filter(e => inScope.forall(_.contains(e.path)))
-          .map(_.bytes).sum
-        val targetBytes = math.max(1L,
-          spark.sessionState.conf.filesMaxPartitionBytes)
-        val shuffleN = math.max(16, math.min(
-          (liveBytes / targetBytes).toInt + 1, 1 << 20))
-        toPhysicalCols(scan.withColumn("__z", z)
+        scan.withColumn("__z", z)
           .repartitionByRange(shuffleN,
             (partCols.map(col) :+ col("__z")): _*)
           .sortWithinPartitions(
             (partCols.map(col) :+ col("__z")): _*)
-          .drop("__z"), currentMeta(spark, root))
-          .write.mode("overwrite").partitionBy(partCols: _*).parquet(stage)
-        val moved = moveStaged(spark, root, stage, "zordered")
-
-        val sigNow = live.map(f0 => f0 -> DvBlobs.signature(root, f0)).toMap
-        if (sigNow != sig0) {
-          // a delete raced the staging scan — same rule as purge:
-          // never commit a stale stage (abandoned files = vacuum fodder)
-          require(sigAttempts < 3,
-            s"zorder restaged 3 times and a concurrent delete raced " +
-              s"each attempt on $root — rerun when the delete storm " +
-              "subsides (abandoned staged files are vacuum fodder)")
-          sigAttempts += 1
-        } else {
-          val statsSchema = meta.map(_.statsSchema)
-            .getOrElse(new org.apache.spark.sql.types.StructType())
-          val movedStats =
-            if (moved.isEmpty) emptyStatsFrame(spark)
-            else perFileStats(relationOver(spark, root,
-              entriesOf(spark, moved), meta), statsSchema)
-          onBeforeCommit()
-          // CAS loop REBASES like purge's: an append/upsert landing
-          // mid-rewrite only ADDS files — (latest − rewritten) ∪
-          // replacements keeps the racer's files live (they just
-          // miss this pass's clustering)
-          var committed = false
-          var casAttempts = 0
-          while (!committed) {
-            casAttempts = boundedCasRetry(root, casAttempts)
-            val base = Snapshots.latestVersion(
-              spark, manifestTable(root)).get
-            val latest = Snapshots.readVersion(
-              spark, manifestTable(root), base)
-            val liveDf = spark.createDataset(live)(
-              org.apache.spark.sql.Encoders.STRING).toDF("file")
-            val next = withSentinelOp(ensureMetaCols(
-                latest.join(liveDf, Seq("file"), "left_anti"))
-              .unionByName(ensureMetaCols(
-                movedStats.withColumn("cdc_batch",
-                  lit(lastCdcBatch(spark, root))))), "zorder")
-            committed = Snapshots.publishCas(
-              spark, manifestTable(root), base, next)
-          }
-          pinOrInvalidateZorderCols(spark, root, zCols, scope)
-          result = live
-        }
+          .drop("__z")
       }
-      result
-    } finally releaseMaintenance(spark, root)
+      pinOrInvalidateZorderCols(spark, root, zCols, scope)
+      rewritten
+    }
   }
 
   /** The clustering columns the table was last z-ordered by, if any. */
@@ -2825,27 +2656,9 @@ object DeletionVectors {
     * maintenance. DvCdcSpec pins the bound across a many-batch run.
     */
   def autoCompactBlobs(spark: SparkSession, root: String,
-      maxBlobs: Int = DefaultAutoCompactBlobs): (Long, Long) = {
-    if (!Snapshots.tryExclusiveCreate(spark, maintMarker(root)))
-      return (0L, 0L) // maintenance busy — the next batch retries
-    try {
-      // replay before folding: a fold renames a crashed publish's only
-      // live blob, and the replay would then drop the intent unapplied
-      DvBlobs.replayIntents(root): Unit
-      import spark.implicits._
-      val dirs = DvBlobs.allFileDirs(root)
-      if (dirs.isEmpty) (0L, 0L)
-      else {
-        val stats = spark.createDataset(dirs)
-          .flatMap(d => DvBlobs.compactDir(d, minBlobs = maxBlobs + 1)
-            .map { case (inputs, _) => (1L, inputs.toLong) })
-          .toDF("dirs", "inputs")
-          .agg(sum("dirs"), sum("inputs")).head()
-        if (stats.isNullAt(0)) (0L, 0L)
-        else (stats.getLong(0), stats.getLong(1))
-      }
-    } finally releaseMaintenance(spark, root)
-  }
+      maxBlobs: Int = DefaultAutoCompactBlobs): (Long, Long) =
+    withMaintenance(spark, root, ifBusy = Some((0L, 0L)))(
+      foldBlobs(spark, root, maxBlobs + 1))
 
   /** Default per-directory small-file bound for [[autoPackFiles]]:
     * a long-running appender fragments each partition into per-batch
@@ -2872,7 +2685,8 @@ object DeletionVectors {
     val hot = liveEntries(spark, root).groupBy(_.partValues)
       .exists(_._2.count(_.bytes < minBytes) > maxFilesPerDir)
     if (!hot) Seq.empty
-    else compactSmallFiles(spark, root, minBytes, opportunistic = true)
+    else withMaintenance(spark, root, ifBusy = Some(Seq.empty[String]))(
+      packSmallFiles(spark, root, minBytes, () => (), None))
   }
 
   private def applyChanges(spark: SparkSession, root: String,
@@ -3262,25 +3076,22 @@ object DeletionVectors {
   /** Bounded wait-then-claim of the maintenance marker — the DSv2
     * row-level write holds it across its whole task phase so a purge
     * cannot replace files whose tombstones the executors are writing
-    * (the claim plays the role [[markWhere]]'s fence plays on the V1
-    * DML path; appends still interleave freely — they only add).
+    * (appends still interleave freely — they only add). Its driver
+    * callbacks span the claim, so it is taken and released by hand
+    * rather than through [[withMaintenance]].
     */
   private[graft] def acquireMaintenanceClaim(spark: SparkSession,
-      root: String, timeoutMs: Long = 15L * 60 * 1000): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!Snapshots.tryExclusiveCreate(spark, maintMarker(root))) {
-      require(System.currentTimeMillis() < deadline,
-        s"maintenance claim $root/_maint still held after ${timeoutMs}ms " +
-          "(crashed writer? remove the marker to recover)")
-      Thread.sleep(50L)
-    }
-  }
+      root: String, timeoutMs: Long = 15L * 60 * 1000): Unit =
+    require(tryMaintenanceClaim(spark, root, timeoutMs),
+      s"maintenance claim $root/_maint still held after ${timeoutMs}ms " +
+        "(crashed writer? remove the marker to recover)")
 
   private[graft] def releaseMaintenanceClaim(spark: SparkSession,
-      root: String): Unit = releaseMaintenance(spark, root)
+      root: String): Unit = Snapshots.removeMarker(spark, maintMarker(root))
 
-  /** Shared bound on the manifest CAS rebase loops (purge commit,
-    * appendCommitted). Snapshots claims are deliberately never
+  /** Shared bound on the manifest CAS loops ([[sentinelFlip]], which
+    * the maintenance rewrites commit through, and
+    * [[commitMovedFiles]]). Snapshots claims are deliberately never
     * auto-expired, so a writer that crashed between tryClaim and
     * releaseClaim leaves `_claims/<base+1>` behind forever — an
     * unbounded rebase loop would then hot-spin, re-running the
@@ -3696,9 +3507,8 @@ object DeletionVectors {
 
   private def vacuumImpl(spark: SparkSession, root: String,
       keepVersions: Int, minAgeMs: Long,
-      dryRun: Boolean): (Long, Long, Long) = {
-    claimMaintenance(spark, root)
-    try {
+      dryRun: Boolean): (Long, Long, Long) =
+    withMaintenance(spark, root, dryRun) {
       import spark.implicits._
       val mt = manifestTable(root)
       val keep = Snapshots.committedVersions(spark, mt)
@@ -3779,10 +3589,6 @@ object DeletionVectors {
       }
       var stagesSwept = 0L
       if (!dryRun) {
-        // finish any crashed delete publish BEFORE sweeping the
-        // pending-blob dirs its intent references (claim is held, so
-        // no live writer can be mid-publish here)
-        DvBlobs.replayIntents(root): Unit
         Snapshots.vacuum(spark, mt, keepVersions)
         staleStages.foreach { st =>
           if (f.delete(st.getPath, true)) stagesSwept += 1
@@ -3828,8 +3634,7 @@ object DeletionVectors {
       // (dry run: sweepable) stage debris
       (dataDeleted, bytesDead,
         dvDeleted + (if (dryRun) staleStages.size.toLong else stagesSwept))
-    } finally releaseMaintenance(spark, root)
-  }
+    }
 
   /** Merge each data file's accumulated delta blobs into one
     * ([[DvBlobs.compactDir]]), DISTRIBUTEDLY — one task per blob dir,
@@ -3857,23 +3662,27 @@ object DeletionVectors {
     * @return (dirs compacted, input blobs removed)
     */
   def compactBlobs(spark: SparkSession, root: String,
-      minBlobs: Int = 2): (Long, Long) = {
-    claimMaintenance(spark, root)
-    try {
-      DvBlobs.replayIntents(root): Unit // see autoCompactBlobs
-      import spark.implicits._
-      val dirs = DvBlobs.allFileDirs(root)
-      if (dirs.isEmpty) (0L, 0L)
-      else {
-        val stats = spark.createDataset(dirs)
-          .flatMap(d => DvBlobs.compactDir(d, minBlobs).map {
-            case (inputs, _) => (1L, inputs.toLong)
-          })
-          .toDF("dirs", "inputs")
-          .agg(sum("dirs"), sum("inputs")).head()
-        if (stats.isNullAt(0)) (0L, 0L)
-        else (stats.getLong(0), stats.getLong(1))
-      }
-    } finally releaseMaintenance(spark, root)
+      minBlobs: Int = 2): (Long, Long) =
+    withMaintenance(spark, root)(foldBlobs(spark, root, minBlobs))
+
+  /** Fold every blob dir holding at least `minBlobs` blobs, one task
+    * per dir; the caller holds the claim. Returns (dirs folded, input
+    * blobs removed).
+    */
+  private def foldBlobs(spark: SparkSession, root: String,
+      minBlobs: Int): (Long, Long) = {
+    import spark.implicits._
+    val dirs = DvBlobs.allFileDirs(root)
+    if (dirs.isEmpty) (0L, 0L)
+    else {
+      val stats = spark.createDataset(dirs)
+        .flatMap(d => DvBlobs.compactDir(d, minBlobs).map {
+          case (inputs, _) => (1L, inputs.toLong)
+        })
+        .toDF("dirs", "inputs")
+        .agg(sum("dirs"), sum("inputs")).head()
+      if (stats.isNullAt(0)) (0L, 0L)
+      else (stats.getLong(0), stats.getLong(1))
+    }
   }
 }

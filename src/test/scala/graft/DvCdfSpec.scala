@@ -461,7 +461,9 @@ class DvCdfSpec extends SparkSpec {
     assert(sums(DV.read(spark, root)) == sums(expect))
     // a busy maintenance claim makes auto-compaction SKIP, not block
     assert(Snapshots.tryExclusiveCreate(spark, s"$root/_maint"))
-    try assert(DV.autoCompactBlobs(spark, root, 0) == ((0L, 0L)))
-    finally Snapshots.removeMarker(spark, s"$root/_maint")
+    try {
+      assert(DV.autoCompactBlobs(spark, root, 0) == ((0L, 0L)))
+      assert(DV.autoPackFiles(spark, root, 0).isEmpty)
+    } finally Snapshots.removeMarker(spark, s"$root/_maint")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DeletionVectors => DV, Snapshots}
+import graft.operators.{DeletionVectors => DV, DvBlobs, Snapshots}
 
 /** `DESCRIBE DETAIL` and `VACUUM ... DRY RUN` — the operational
   * introspection faces: know what a table IS and what a vacuum WOULD
@@ -122,5 +122,36 @@ class DvDetailSpec extends SparkSpec {
     assert(real.getLong(1) == dry.getLong(2),
       s"dry-run dirs ${dry.getLong(2)} != actual ${real.getLong(1)}")
     assert(DV.read(spark, root).count() == liveBefore)
+  }
+
+  test("VACUUM DRY RUN leaves a half-published DELETE's intent and the " +
+      "masked read unchanged") {
+    val root = Files.createTempDirectory("graft_dvdryintent").toString
+    val name = s"dvdryintent_t_${math.abs(root.hashCode)}"
+    val ev = graft.sources.Tables.events(spark, sf)
+      .orderBy("event_id").limit(300)
+      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+      .localCheckpoint()
+    DV.init(spark, ev.repartition(4), root, Seq("event_type"))
+    spark.sql(s"CREATE TABLE $name USING `graft-dv` OPTIONS (path '$root')")
+    // a crashed two-blob DELETE publish: intent journaled, first blob
+    // live, second still pending
+    val files = DV.manifest(spark, root).select("file")
+      .collect().map(_.getString(0)).take(2).toSeq
+    val pendingRoot = s"$root/_dml_stage_dry_dvpending"
+    val blobs = files.map(f => DvBlobs.writeDelta(pendingRoot, f, Array(0L)))
+    val intent = new org.apache.hadoop.fs.Path(
+      DvBlobs.writeIntent(root, blobs))
+    DvBlobs.publish(blobs.head, root): Unit
+    def ids = DV.read(spark, root).select("event_id")
+      .collect().map(_.getLong(0)).toSet
+    val halfApplied = ids
+    assert(halfApplied.size == 299)
+
+    graft.GraftSql.sql(spark, s"VACUUM $name RETAIN 0 HOURS DRY RUN")
+      .collect()
+    assert(intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(intent), "the dry run replayed (and removed) the intent")
+    assert(ids == halfApplied, "the dry run changed the masked read")
   }
 }
