@@ -183,8 +183,10 @@ object DeletionVectors {
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .fieldNames.toSeq
 
-  /** Add the round-11 metadata columns (null) to a pre-evolution
-    * manifest frame so unions across manifest generations line up.
+  /** Add every optional manifest column a frame lacks (null): file
+    * stats frames carry none of the sentinel's columns, and the
+    * row-tracking pair appears only once tracking is enabled — so
+    * unions of manifest frames line up.
     */
   private def ensureMetaCols(df: DataFrame): DataFrame = {
     val want = Seq(
@@ -273,36 +275,37 @@ object DeletionVectors {
     * name — e.g. after rename chains a→c, b→a). Unmapped columns
     * (including `__file`/`__pos`) pass through. No-op without a map.
     */
-  private def toLogicalCols(df: DataFrame,
-      meta: Option[TableMeta]): DataFrame =
-    meta.map(_.colMap).filter(_.nonEmpty) match {
-      case None => df
-      case Some(cm) =>
-        val inv = cm.map(_.swap) // physical -> logical
-        df.select(df.columns.toSeq.map(c =>
-          inv.get(c).map(l => col(c).as(l)).getOrElse(col(c))): _*)
+  private def toLogicalCols(df: DataFrame, meta: TableMeta): DataFrame =
+    if (meta.colMap.isEmpty) df
+    else {
+      val inv = meta.colMap.map(_.swap) // physical -> logical
+      df.select(df.columns.toSeq.map(c =>
+        inv.get(c).map(l => col(c).as(l)).getOrElse(col(c))): _*)
     }
 
   /** Rename a frame's columns LOGICAL→PHYSICAL per `meta.colMap` —
     * the write-side inverse of [[toLogicalCols]], applied just before
     * staging parquet so files always carry the frozen physical names.
     */
-  private def toPhysicalCols(df: DataFrame,
-      meta: Option[TableMeta]): DataFrame =
-    meta.map(_.colMap).filter(_.nonEmpty) match {
-      case None => df
-      case Some(cm) =>
-        df.select(df.columns.toSeq.map(c =>
-          cm.get(c).map(p => col(c).as(p)).getOrElse(col(c))): _*)
-    }
+  private def toPhysicalCols(df: DataFrame, meta: TableMeta): DataFrame =
+    if (meta.colMap.isEmpty) df
+    else df.select(df.columns.toSeq.map(c =>
+      meta.colMap.get(c).map(p => col(c).as(p)).getOrElse(col(c))): _*)
 
-  /** Metadata recorded in version v's sentinel — None for
-    * pre-evolution manifests (readers fall back to the legacy
-    * footer-schema + path-parse derivation). Cached like
-    * [[liveEntries]]: committed manifests are immutable.
+  /** What one committed manifest version says about the table: the
+    * metadata its sentinel records and the live files' byte total (the
+    * lazy file index's planning statistic). Both come from ONE
+    * manifest aggregate and are cached per immutable committed version
+    * (key: app, root, table id, version — the table id keeps a
+    * re-created root's restarted version numbers from hitting the old
+    * incarnation's entries). The live ENTRIES are cached apart
+    * ([[entriesCache]]): the lazy index must not collect entries a
+    * query's filters prune.
     */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[TableMeta]]()
+  private final case class VersionInfo(meta: TableMeta, liveBytes: Long)
+
+  private val versionCache =
+    new java.util.concurrent.ConcurrentHashMap[String, VersionInfo]()
 
   /** Reader features this build implements — the table-features half
     * of protocol gating (the Delta `minReaderVersion` shape, feature-
@@ -344,87 +347,98 @@ object DeletionVectors {
     * commit missing the change images the table's consumers rely on.
     */
   private[graft] def requireWriterFeatures(spark: SparkSession,
-      root: String): Unit =
-    currentMeta(spark, root).foreach { m =>
-      val missing = m.features -- supportedWriterFeatures(spark)
-      require(missing.isEmpty,
-        s"graft-dv table at $root requires writer feature(s) " +
-          s"${missing.toSeq.sorted.mkString(", ")} this writer does " +
-          "not support — a stripped writer would stage files under " +
-          "wrong physical names or skip required change-data " +
-          "recording; upgrade the writer (refusing before any state " +
-          "was touched)")
-    }
-
-  /** [[metaAt0]] + the protocol gate: enforcement sits OUTSIDE the
-    * meta cache so a reader-capability change is honored immediately.
-    */
-  private def metaAt(spark: SparkSession, root: String,
-      v: Long): Option[TableMeta] = {
-    val meta = metaAt0(spark, root, v)
-    meta.foreach { m =>
-      val missing = m.features -- supportedReaderFeatures(spark)
-      require(missing.isEmpty,
-        s"graft-dv table at $root (manifest v$v) requires reader " +
-          s"feature(s) ${missing.toSeq.sorted.mkString(", ")} this " +
-          "reader does not support — upgrade the reader; refusing to " +
-          "misread the table")
-    }
-    meta
+      root: String): Unit = {
+    val missing = currentMeta(spark, root).features --
+      supportedWriterFeatures(spark)
+    require(missing.isEmpty,
+      s"graft-dv table at $root requires writer feature(s) " +
+        s"${missing.toSeq.sorted.mkString(", ")} this writer does " +
+        "not support — a stripped writer would stage files under " +
+        "wrong physical names or skip required change-data " +
+        "recording; upgrade the writer (refusing before any state " +
+        "was touched)")
   }
 
-  private def metaAt0(spark: SparkSession, root: String,
-      v: Long): Option[TableMeta] = {
+  /** The format gate: every manifest version's sentinel carries the
+    * table metadata (`schema_json`, `part_cols`) and every root its
+    * `_tid` table id. A table without them is refused, never read by
+    * guessing the schema from file footers and the layout from paths
+    * — the reader-feature gate's rule applied to the format itself.
+    */
+  private def unsupportedFormat(root: String, what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"graft-dv table at $root has an unsupported manifest format " +
+        s"($what) — this build reads only tables whose every manifest " +
+        "sentinel records the schema and partition columns; refusing " +
+        "to guess them")
+
+  /** [[versionInfo]]'s metadata + the protocol gate: enforcement sits
+    * OUTSIDE the cache so a reader-capability change is honored
+    * immediately.
+    */
+  private def metaAt(spark: SparkSession, root: String,
+      v: Long): TableMeta = {
+    val m = versionInfo(spark, root, v).meta
+    val missing = m.features -- supportedReaderFeatures(spark)
+    require(missing.isEmpty,
+      s"graft-dv table at $root (manifest v$v) requires reader " +
+        s"feature(s) ${missing.toSeq.sorted.mkString(", ")} this " +
+        "reader does not support — upgrade the reader; refusing to " +
+        "misread the table")
+    m
+  }
+
+  private def versionInfo(spark: SparkSession, root: String,
+      v: Long): VersionInfo = {
     val key = s"${spark.sparkContext.applicationId}|$root|" +
-      s"${tableId(spark, root)}|$v|meta"
-    if (metaCache.size > 64) metaCache.clear()
-    metaCache.computeIfAbsent(key, _ => {
-      val m = Snapshots.readVersion(spark, manifestTable(root), v)
-      if (!m.columns.contains("schema_json")) None
-      else {
-        val cols = Seq("schema_json", "part_cols") ++
-          Seq("stats_cols", "constraints", "old_layouts",
-            "col_map", "dropped_cols", "features")
-            .filter(m.columns.contains)
-        m.filter(col("file") === Sentinel)
-          .select(cols.map(col): _*).collect().headOption
-          .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-          .map { r =>
-            def at[T](name: String)(get: Int => T): Option[T] = {
-              val i = cols.indexOf(name)
-              if (i < 0 || r.isNullAt(i)) None else Some(get(i))
-            }
-            val stats = at("stats_cols")(i =>
-              org.apache.spark.sql.types.DataType
-                .fromJson(r.getString(i))
-                .asInstanceOf[org.apache.spark.sql.types.StructType])
-              .getOrElse(new org.apache.spark.sql.types.StructType())
-            val cons = at("constraints")(i =>
-              r.getMap[String, String](i).toMap).getOrElse(Map.empty)
-            val olds = at("old_layouts")(i => r.getString(i))
-              .map(_.split('\n').toSeq.filter(_.nonEmpty)
-                .map(partColsOfJson)).getOrElse(Nil)
-            val cmap = at("col_map")(i =>
-              r.getMap[String, String](i).toMap).getOrElse(Map.empty)
-            val dropped = at("dropped_cols")(i => r.getString(i))
-              .map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-            val feats = at("features")(i => r.getString(i))
-              .map(_.split('\n').toSet.filter(_.nonEmpty))
-              .getOrElse(Set.empty[String])
-            TableMeta(org.apache.spark.sql.types.DataType
-              .fromJson(r.getString(0))
-              .asInstanceOf[org.apache.spark.sql.types.StructType],
-              partColsOfJson(r.getString(1)), stats, cons, olds,
-              cmap, dropped, feats)
-          }
+      s"${tableId(spark, root)}|$v"
+    if (versionCache.size > 256) versionCache.clear()
+    versionCache.computeIfAbsent(key, _ => {
+      val m = ensureMetaCols(
+        Snapshots.readVersion(spark, manifestTable(root), v))
+      val isSentinel = col("file") === Sentinel
+      val cols = Seq("schema_json", "part_cols", "stats_cols",
+        "constraints", "old_layouts", "col_map", "dropped_cols",
+        "features")
+      val agg = m.agg(
+        first(when(isSentinel, struct(cols.map(col): _*)),
+          ignoreNulls = true),
+        sum(when(!isSentinel, col("bytes")))).head()
+      val r = if (agg.isNullAt(0)) null else agg.getStruct(0)
+      if (r == null || r.isNullAt(0) || r.isNullAt(1))
+        unsupportedFormat(root, s"manifest v$v has no schema_json/" +
+          "part_cols in its sentinel")
+      def at[T](name: String)(get: Int => T): Option[T] = {
+        val i = cols.indexOf(name)
+        if (r.isNullAt(i)) None else Some(get(i))
       }
+      val lines = (name: String) => at(name)(r.getString)
+        .map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+      VersionInfo(TableMeta(
+        org.apache.spark.sql.types.DataType.fromJson(r.getString(0))
+          .asInstanceOf[org.apache.spark.sql.types.StructType],
+        partColsOfJson(r.getString(1)),
+        at("stats_cols")(i => org.apache.spark.sql.types.DataType
+            .fromJson(r.getString(i))
+            .asInstanceOf[org.apache.spark.sql.types.StructType])
+          .getOrElse(new org.apache.spark.sql.types.StructType()),
+        at("constraints")(i => r.getMap[String, String](i).toMap)
+          .getOrElse(Map.empty),
+        lines("old_layouts").map(partColsOfJson),
+        at("col_map")(i => r.getMap[String, String](i).toMap)
+          .getOrElse(Map.empty),
+        lines("dropped_cols"), lines("features").toSet),
+        if (agg.isNullAt(1)) 0L else agg.getLong(1))
     })
   }
 
-  private def currentMeta(spark: SparkSession,
-      root: String): Option[TableMeta] =
-    Snapshots.latestVersion(spark, manifestTable(root))
-      .flatMap(v => metaAt(spark, root, v))
+  /** Latest committed manifest version (fails loudly without one). */
+  private def latestV(spark: SparkSession, root: String): Long =
+    Snapshots.latestVersion(spark, manifestTable(root)).getOrElse(
+      throw new IllegalStateException(s"no committed manifest at $root"))
+
+  private def currentMeta(spark: SparkSession, root: String): TableMeta =
+    metaAt(spark, root, latestV(spark, root))
 
   /** Add-only schema merge: existing columns must keep their type
     * (no retyping/widening — fail loudly), new columns append as
@@ -502,10 +516,7 @@ object DeletionVectors {
     // than needing a racy invalidation.
     df.write.mode("overwrite").partitionBy(partCols: _*)
       .parquet(dataDir(root))
-    val tidOut = f.create(new Path(tidMarker(root)), true)
-    try tidOut.write(
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    finally tidOut.close()
+    writeTableId(spark, root)
     val dataSchema = org.apache.spark.sql.types.StructType(
       df.schema.filterNot(fd => partCols.contains(fd.name)))
     val statsSchema = org.apache.spark.sql.types.StructType(
@@ -532,10 +543,7 @@ object DeletionVectors {
     val f = hfs(spark, root)
     f.delete(new Path(root), true)
     f.mkdirs(new Path(dataDir(root)))
-    val tidOut = f.create(new Path(tidMarker(root)), true)
-    try tidOut.write(
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    finally tidOut.close()
+    writeTableId(spark, root)
     val dataSchema = org.apache.spark.sql.types.StructType(
       schemaWithParts.filterNot(fd => partCols.contains(fd.name)))
     Snapshots.publish(spark, manifestTable(root),
@@ -564,28 +572,22 @@ object DeletionVectors {
 
   /** CDC high-water mark WITH the stream lineage that owns it: the
     * highest committed batch id and the streaming query id that set it
-    * (None for batch-applied CDC or pre-round-12 manifests). Dedup
+    * (None for batch-applied CDC). Dedup
     * must compare BOTH — `batchId <= hw` alone silently swallows every
     * batch of a fresh-checkpoint query (ids restart at 0) against a
     * table an earlier stream wrote.
     */
   def cdcHighWater(spark: SparkSession,
       root: String): (Long, Option[String]) = {
-    val m = manifestFull(spark, root)
-    if (!m.columns.contains("cdc_stream"))
-      (lastCdcBatch(spark, root), None)
-    else {
-      val r = m.agg(max("cdc_batch"),
-        max(when(col("file") === Sentinel, col("cdc_stream")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getString(1)))
-    }
+    val r = manifestFull(spark, root).agg(max("cdc_batch"),
+      max(when(col("file") === Sentinel, col("cdc_stream")))).head()
+    (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getString(1)))
   }
 
   /** Table history — one row per RETAINED committed manifest version
     * (the `DESCRIBE HISTORY` face): commit instant (the commit
     * marker's mtime, the `TIMESTAMP AS OF` clock), the recorded
-    * operation (init/append/upsert/update/merge/purge/restore — null
-    * for pre-round-11 manifests, which predate op recording), live
+    * operation (init/append/upsert/update/merge/purge/restore), live
     * file/row/byte totals, the file-set delta vs the PREVIOUS RETAINED
     * version (files_added/files_removed — vacuumed predecessors make
     * the earliest retained version report its whole set as added), and
@@ -675,31 +677,36 @@ object DeletionVectors {
 
   private def tidMarker(root: String): String = s"$root/_tid"
 
-  /** This incarnation's table id ("" for pre-_tid legacy layouts).
-    * One small read per lookup — the price of recreation-proof cache
-    * keys (version numbers restart when a root is re-inited; a
-    * (root, version) key alone can serve the OLD table's live set to
-    * the new one).
+  /** Give a new table incarnation (init, empty init, clone) its fresh
+    * table id.
+    */
+  private def writeTableId(spark: SparkSession, root: String): Unit = {
+    val out = hfs(spark, root).create(new Path(tidMarker(root)), true)
+    try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** This incarnation's table id. One small read per lookup — the
+    * price of recreation-proof cache keys (version numbers restart
+    * when a root is re-inited; a (root, version) key alone can serve
+    * the OLD table's live set to the new one).
     */
   private def tableId(spark: SparkSession, root: String): String = {
     val p = new Path(tidMarker(root))
     val f = hfs(spark, root)
-    if (!f.exists(p)) ""
-    else {
-      val in = f.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        var b = in.read()
-        while (b >= 0) { buf.write(b); b = in.read() }
-        buf.toString("UTF-8")
-      } finally in.close()
-    }
+    if (!f.exists(p)) unsupportedFormat(root, "no _tid table id")
+    val in = f.open(p)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      var b = in.read()
+      while (b >= 0) { buf.write(b); b = in.read() }
+      buf.toString("UTF-8")
+    } finally in.close()
   }
 
   private def liveEntries(spark: SparkSession,
       root: String): Seq[GraftDvApi.LiveFile] =
-    entriesAt(spark, root,
-      Snapshots.latestVersion(spark, manifestTable(root)).getOrElse(-1L))
+    entriesAt(spark, root, latestV(spark, root))
 
   private def entriesAt(spark: SparkSession, root: String,
       v: Long): Seq[GraftDvApi.LiveFile] = {
@@ -742,30 +749,15 @@ object DeletionVectors {
 
   private def relationOver(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: Option[TableMeta],
+      meta: TableMeta,
       physExtra: Seq[org.apache.spark.sql.types.StructField] = Nil)
       : DataFrame = {
-    val partCols = meta.map(_.partCols).getOrElse {
-      val vectors = entries.map(e =>
-        GraftDvApi.parsePartitions(e.path).map(_._1)).distinct
-      require(vectors.size == 1,
-        s"mixed partition layouts under ${dataDir(root)}: $vectors")
-      vectors.head
-    }
     // schema from the manifest sentinel (versioned with the live set —
     // the schema-evolution carrier), mapped to the PHYSICAL field
     // names the parquet files carry (renamed columns resolve by their
     // frozen written name; [[toLogicalCols]] restores the logical
-    // names above the scan). Legacy manifests fall back to one
-    // entry's parquet FOOTER — never string-path DataSource resolution
-    // (re-encodes escaped partition segments, PATH_NOT_FOUND) and
-    // never a directory probe (stale pre-vacuum siblings)
-    val dataSchema0 = meta.map(m => m.physicalSchema(m.dataSchema))
-      .getOrElse {
-      val head = GraftDvApi.pathOf(entries.head.path)
-      GraftDvApi.fileSchema(spark,
-        hfs(spark, entries.head.path).getFileStatus(head))
-    }
+    // names above the scan)
+    val dataSchema0 = meta.physicalSchema(meta.dataSchema)
     // physExtra: physical columns OUTSIDE the logical schema (the
     // row-tracking __row_id materialized into rewrite replacements) —
     // files without them null-fill (the parquet missing-column rule)
@@ -773,7 +765,7 @@ object DeletionVectors {
       if (physExtra.isEmpty) dataSchema0
       else org.apache.spark.sql.types.StructType(
         dataSchema0.fields ++ physExtra)
-    GraftDvApi.relation(spark, dataDir(root), partCols,
+    GraftDvApi.relation(spark, dataDir(root), meta.partCols,
       entries, dataSchema)
   }
 
@@ -789,12 +781,12 @@ object DeletionVectors {
     * generation — and union by name under the table's full schema
     * (an ex-partition column is a path value in old files and a data
     * column in new ones; both surface identically). Single-layout
-    * sets (the common case, and every fully-migrated table) take the
-    * exact pre-evolution path.
+    * sets (the common case, and every fully-migrated table) read
+    * through one relation.
     */
   private def scanWithPos(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: Option[TableMeta]): DataFrame = {
+      meta: TableMeta): DataFrame = {
     val data = posScanUnmasked(spark, root, entries, meta)
     if (DvBlobs.hasAny(root))
       data.filter(GraftFunctions.dvAlive(spark,
@@ -812,35 +804,31 @@ object DeletionVectors {
     */
   private def posScanUnmasked(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: Option[TableMeta],
+      meta: TableMeta,
       physExtra: Seq[org.apache.spark.sql.types.StructField] = Nil)
       : DataFrame = {
     val layouts = entries
       .map(e => GraftDvApi.parsePartitions(e.path).map(_._1)).distinct
     // a SINGLE-layout subset may still be an OLD generation (a
-    // migrate/CDF/constraint scan over pre-evolution files): reading
+    // migrate/CDF/constraint scan over old-layout files): reading
     // it under the CURRENT meta would bind the path values to the
     // wrong column (day=X served as event_type=X) and null the real
     // path column — the dv_partition_evolution oracle caught exactly
     // this. Trust the PARSED layout whenever it disagrees with meta.
-    val oldGeneration = meta.exists(m =>
-      layouts.size == 1 && layouts.head != m.partCols)
+    val oldGeneration = layouts.size == 1 && layouts.head != meta.partCols
     if (layouts.size <= 1 && !oldGeneration)
       toLogicalCols(relationOver(spark, root, entries, meta, physExtra)
         .withColumn("__file", col("_metadata.file_path"))
         .withColumn("__pos", col("_metadata.row_index")), meta)
     else {
-      val m = meta.getOrElse(throw new IllegalStateException(
-        s"mixed partition layouts under $root need a schema-in-log " +
-          "manifest (legacy manifests cannot evolve partitioning)"))
-      val full = m.fullSchema
+      val full = meta.fullSchema
       val outCols = (full.fieldNames.toSeq ++
         physExtra.map(_.name) :+ "__file" :+ "__pos").map(col)
       val parts = entries
         .groupBy(e => GraftDvApi.parsePartitions(e.path).map(_._1))
         .toSeq.sortBy(_._1.mkString("\u0000"))
         .map { case (layout, es) =>
-          val ds0 = m.physicalSchema(org.apache.spark.sql.types.StructType(
+          val ds0 = meta.physicalSchema(org.apache.spark.sql.types.StructType(
             full.filterNot(fd => layout.contains(fd.name))))
           val ds = org.apache.spark.sql.types.StructType(
             ds0.fields ++ physExtra)
@@ -865,28 +853,8 @@ object DeletionVectors {
     else data
   }
 
-  /** Total live bytes of a manifest version (the lazy file index's
-    * planning statistic) — one small manifest aggregate, cached per
-    * immutable committed version.
-    */
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def liveBytesAt(spark: SparkSession, root: String,
-      v: Long): Long = {
-    val key = s"${spark.sparkContext.applicationId}|$root|" +
-      s"${tableId(spark, root)}|$v|bytes"
-    if (sizeCache.size > 256) sizeCache.clear()
-    sizeCache.computeIfAbsent(key, _ => {
-      val r = Snapshots.readVersion(spark, manifestTable(root), v)
-        .filter(col("file") =!= Sentinel).agg(sum("bytes")).head()
-      java.lang.Long.valueOf(if (r.isNullAt(0)) 0L else r.getLong(0))
-    }).longValue()
-  }
-
-  /** The LAZY masked scan (metadata-bearing manifests only): the
-    * live-file set stays in the manifest parquet until the query's
-    * own partition/stats filters prune it
+  /** The LAZY masked scan: the live-file set stays in the manifest
+    * parquet until the query's own partition/stats filters prune it
     * ([[GraftDvApi.LazyManifestFileIndex]]) — the driver never
     * materializes entries a pruned query doesn't touch.
     */
@@ -896,13 +864,13 @@ object DeletionVectors {
       spark,
       dataDir(root), s"${manifestTable(root)}/v=$v", meta.partCols,
       meta.statsSchema, meta.physicalSchema(meta.dataSchema),
-      liveBytesAt(spark, root, v),
+      versionInfo(spark, root, v).liveBytes,
       // unfiltered executions serve from the per-version entries
       // cache instead of re-running a manifest job each time —
       // pinned to THIS index's version (re-resolving latest here
       // could serve a newer live set than the index's manifest)
       Some(() => entriesAt(spark, root, v)), None,
-      Some(skippingHook(spark, root)))), Some(meta))
+      Some(skippingHook(spark, root)))), meta)
 
   /** Anchored hive-chain pattern matching exactly the files of one
     * partition-layout generation — pushed into the manifest scan so
@@ -933,7 +901,7 @@ object DeletionVectors {
       v: Long, meta: TableMeta): DataFrame = {
     val full = meta.fullSchema
     val outCols = (full.fieldNames.toSeq :+ "__file" :+ "__pos").map(col)
-    val bytes = liveBytesAt(spark, root, v)
+    val bytes = versionInfo(spark, root, v).liveBytes
     val gens = (meta.partCols +: meta.oldLayouts).distinct
     val parts = gens.map { layout =>
       val ds = meta.physicalSchema(org.apache.spark.sql.types.StructType(
@@ -944,7 +912,7 @@ object DeletionVectors {
           Some(layoutRegex(spark, root, layout)),
           Some(skippingHook(spark, root)))
         .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index")), Some(meta))
+        .withColumn("__pos", col("_metadata.row_index")), meta)
         .select(outCols: _*)
     }
     val data = parts.reduce(_ unionByName _)
@@ -956,49 +924,35 @@ object DeletionVectors {
 
   /** The table as readers see it: committed files minus tombstones.
     * A table whose purge removed EVERY file from the manifest (all
-    * rows deleted) is still readable — schema comes from the data
-    * directory, which keeps the dead files until [[vacuum]].
+    * rows deleted) is still readable — schema comes from the manifest
+    * sentinel.
     */
   def read(spark: SparkSession, root: String): DataFrame =
     readPos0(spark, root).drop("__file", "__pos")
 
-  /** Shared masked positional read: lazy manifest-resolved scan when
-    * the manifest carries metadata (no driver entry materialization
-    * until the query's filters prune the manifest), legacy eager
-    * collect otherwise.
+  /** Shared masked positional read: the lazy manifest-resolved scan
+    * (no driver entry materialization until the query's filters prune
+    * the manifest). A mid-evolution table (old-layout files possibly
+    * live) reads through one LAZY index per layout generation —
+    * pruning and driver holdings stay per-generation even before
+    * migration converges (which clears the flag and collapses to one
+    * index).
     */
   private def readPos0(spark: SparkSession, root: String): DataFrame = {
-    val vOpt = Snapshots.latestVersion(spark, manifestTable(root))
-    vOpt.flatMap(v => metaAt(spark, root, v).map(m => (v, m))) match {
-      // a mid-evolution table (old-layout files possibly live) reads
-      // through one LAZY index per layout generation — pruning and
-      // driver holdings stay per-generation even before migration
-      // converges (which clears the flag and collapses to one index)
-      case Some((v, m)) if m.oldLayouts.nonEmpty =>
-        scanLazyMixedWithPos(spark, root, v, m)
-      case Some((v, m)) => scanLazyWithPos(spark, root, v, m)
-      case None =>
-        val entries = liveEntries(spark, root)
-        if (entries.isEmpty)
-          emptyTable(spark, root)
-            .withColumn("__file", lit("")).withColumn("__pos", lit(0L))
-        else scanWithPos(spark, root, entries, None)
-    }
+    val v = latestV(spark, root)
+    val m = metaAt(spark, root, v)
+    if (m.oldLayouts.nonEmpty) scanLazyMixedWithPos(spark, root, v, m)
+    else scanLazyWithPos(spark, root, v, m)
   }
 
   /** Typed empty frame for an emptied live set: schema from the
-    * manifest sentinel when present (partition values read back as
-    * string, matching the file index's partition typing); legacy
-    * tables fall back to the data-dir footer probe.
+    * manifest sentinel (partition values read back as string, matching
+    * the file index's partition typing).
     */
   private def emptyTable(spark: SparkSession, root: String): DataFrame =
-    currentMeta(spark, root) match {
-      case Some(m) =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          m.fullSchema)
-      case None => spark.read.parquet(dataDir(root)).limit(0)
-    }
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      currentMeta(spark, root).fullSchema)
 
   /** The table as of committed manifest version `v`, masked — read
     * under THAT version's recorded schema (time travel across schema
@@ -1205,9 +1159,7 @@ object DeletionVectors {
   private[graft] def commitChangeDataOnly(spark: SparkSession,
       root: String, stage: CdfStage): Long = {
     val v = sentinelFlip(spark, root, "delete") { (base, latest) =>
-      val feats = metaAt(spark, root, base)
-        .map(_.features).getOrElse(Set.empty[String])
-      withFeatures(latest, feats + "cdf-updates")
+      withFeatures(latest, metaAt(spark, root, base).features + "cdf-updates")
     }
     stage.onCommitted(v)
     v
@@ -1252,7 +1204,7 @@ object DeletionVectors {
 
   private[graft] def rowTrackingOn(spark: SparkSession,
       root: String): Boolean =
-    currentMeta(spark, root).exists(_.features.contains("row-tracking"))
+    currentMeta(spark, root).features.contains("row-tracking")
 
   private val RowIdField = org.apache.spark.sql.types.StructField(
     "__row_id", org.apache.spark.sql.types.LongType)
@@ -1266,10 +1218,7 @@ object DeletionVectors {
     require(!rowTrackingOn(spark, root),
       s"row tracking is already enabled on the graft-dv table at $root")
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val meta = metaAt(spark, root, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest without " +
-            "schema metadata — row tracking needs a schema-in-log table"))
+      val meta = metaAt(spark, root, base)
       val total = latest.filter(col("file") =!= Sentinel)
         .agg(coalesce(sum(col("rows")), lit(0L))).head().getLong(0)
       // global window = ONE task over MANIFEST rows (metadata scale:
@@ -1311,7 +1260,7 @@ object DeletionVectors {
     */
   private def posScanRowId(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: Option[TableMeta]): DataFrame = {
+      meta: TableMeta): DataFrame = {
     if (entries.isEmpty)
       return scanWithPos(spark, root, entries, meta)
         .withColumn("__row_id", lit(null).cast("long"))
@@ -1339,8 +1288,8 @@ object DeletionVectors {
     */
   private def rewriteSource(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: Option[TableMeta]): DataFrame =
-    if (meta.exists(_.features.contains("row-tracking")))
+      meta: TableMeta): DataFrame =
+    if (meta.features.contains("row-tracking"))
       posScanRowId(spark, root, entries, meta).drop("__file", "__pos")
     else
       scanWithPos(spark, root, entries, meta).drop("__file", "__pos")
@@ -1641,8 +1590,7 @@ object DeletionVectors {
           // manifest-fed relation, not parquet(strings): explicit
           // path strings re-encode escaped partition segments
           else perFileStats(relationOver(spark, root,
-            entriesOf(spark, moved), meta), meta.map(_.statsSchema)
-            .getOrElse(new org.apache.spark.sql.types.StructType()))
+            entriesOf(spark, moved), meta), meta.statsSchema)
         onBeforeCommit()
         // anti-join, not isin, and no broadcast HINT: victims can
         // approach the full file count after a broad delete — an
@@ -1905,10 +1853,7 @@ object DeletionVectors {
       org.apache.hadoop.fs.FileUtil.copy(srcFs, srcDv, f,
         new Path(dvDir(dstRoot)), false, true,
         spark.sparkContext.hadoopConfiguration): Unit
-    val tidOut = f.create(new Path(tidMarker(dstRoot)), true)
-    try tidOut.write(
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    finally tidOut.close()
+    writeTableId(spark, dstRoot)
     val next = withSentinelOp(
       ensureMetaCols(Snapshots.readVersion(spark, srcMt, v)), "clone")
     Snapshots.publish(spark, manifestTable(dstRoot), next)
@@ -1927,8 +1872,7 @@ object DeletionVectors {
     var casAttempts = 0
     while (out < 0) {
       casAttempts = boundedCasRetry(root, casAttempts)
-      val base = Snapshots.latestVersion(spark, mt).getOrElse(
-        throw new IllegalStateException(s"no committed manifest at $root"))
+      val base = latestV(spark, root)
       val latest = withSentinelOp(
         ensureMetaCols(Snapshots.readVersion(spark, mt, base)), op)
       if (Snapshots.publishCas(spark, mt, base, next(base, latest)))
@@ -1949,10 +1893,7 @@ object DeletionVectors {
       add: org.apache.spark.sql.types.StructType): Long = {
     require(add.nonEmpty, "ALTER TABLE ADD COLUMNS takes at least one column")
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val meta = metaAt(spark, root, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest without " +
-            "schema metadata — ALTER needs a schema-in-log table"))
+      val meta = metaAt(spark, root, base)
       add.fields.foreach { fd =>
         require(!meta.dataSchema.fieldNames.contains(fd.name) &&
             !meta.partCols.contains(fd.name),
@@ -2083,10 +2024,7 @@ object DeletionVectors {
       from: String, to: String): Long = {
     require(from != to, s"RENAME COLUMN $from TO $to is a no-op")
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val meta = metaAt(spark, root, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest without " +
-            "schema metadata — ALTER needs a schema-in-log table"))
+      val meta = metaAt(spark, root, base)
       requirePlainDataColumn(spark, root, meta, from, "RENAME COLUMN")
       require(!meta.dataSchema.fieldNames.contains(to) &&
           !meta.partCols.contains(to),
@@ -2117,10 +2055,7 @@ object DeletionVectors {
   def alterDropColumn(spark: SparkSession, root: String,
       name: String): Long =
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val meta = metaAt(spark, root, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest without " +
-            "schema metadata — ALTER needs a schema-in-log table"))
+      val meta = metaAt(spark, root, base)
       requirePlainDataColumn(spark, root, meta, name, "DROP COLUMN")
       require(meta.dataSchema.length > 1,
         s"DROP COLUMN: $name is the table's last data column")
@@ -2139,7 +2074,7 @@ object DeletionVectors {
     */
   private[graft] def columnMappingOf(spark: SparkSession,
       root: String): Map[String, String] =
-    currentMeta(spark, root).map(_.colMap).getOrElse(Map.empty)
+    currentMeta(spark, root).colMap
 
   /** Map a write schema's field names logical→physical for the DSv2
     * executor writers (identity when no column was ever renamed).
@@ -2156,7 +2091,7 @@ object DeletionVectors {
   /** The table's CHECK constraints (name → boolean SQL expression). */
   def constraintsOf(spark: SparkSession,
       root: String): Map[String, String] =
-    currentMeta(spark, root).map(_.constraints).getOrElse(Map.empty)
+    currentMeta(spark, root).constraints
 
   private def oldLayoutsJson(layouts: Seq[Seq[String]]): String =
     layouts.map(partColsJson).mkString("\n")
@@ -2182,10 +2117,7 @@ object DeletionVectors {
       "SET PARTITIONING takes at least one column (the layer's layout " +
         "unit is the hive partition directory)")
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val meta = metaAt(spark, root, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest without " +
-            "schema metadata — partition evolution needs schema-in-log"))
+      val meta = metaAt(spark, root, base)
       require(newCols != meta.partCols,
         s"table is already partitioned by ${newCols.mkString(",")}")
       val full = meta.fullSchema
@@ -2230,11 +2162,8 @@ object DeletionVectors {
       scope: Option[String] = None,
       onBeforeCommit: () => Unit = () => ()): Seq[String] =
     withMaintenance(spark, root) {
-      val partCols = partitionColsOf(spark, root)
-      val meta = currentMeta(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-dv table at $root has a legacy manifest — " +
-            "migration needs schema-in-log"))
+      val meta = currentMeta(spark, root)
+      val partCols = meta.partCols
       val old = liveEntries(spark, root).filter(e =>
         GraftDvApi.parsePartitions(e.path).map(_._1) != partCols)
       val victims = scope match {
@@ -2300,15 +2229,12 @@ object DeletionVectors {
     // this version (file content is immutable and tombstones only
     // REMOVE rows, so added files are the only way the check can turn
     // false — the delta validation is sound and O(raced files))
-    val mt = manifestTable(root)
-    var validatedV = Snapshots.latestVersion(spark, mt).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $root"))
+    var validatedV = latestV(spark, root)
     assertHolds(readVersion(spark, root, validatedV))
     onBeforeCommit() // test hook: the validated-but-unflipped window
     sentinelFlip(spark, root, "alter") { (base, latest) =>
       val baseMeta = metaAt(spark, root, base)
-      val cons = baseMeta.map(_.constraints).getOrElse(Map.empty)
-      require(!cons.contains(name),
+      require(!baseMeta.constraints.contains(name),
         s"constraint $name already exists on the graft-dv table at $root")
       if (base != validatedV) {
         val seen = entriesAt(spark, root, validatedV).map(_.path).toSet
@@ -2331,9 +2257,7 @@ object DeletionVectors {
   def alterDropConstraint(spark: SparkSession, root: String,
       name: String): Long =
     sentinelFlip(spark, root, "alter") { (base, latest) =>
-      val cons = metaAt(spark, root, base).map(_.constraints)
-        .getOrElse(Map.empty)
-      require(cons.contains(name),
+      require(metaAt(spark, root, base).constraints.contains(name),
         s"no CHECK constraint named $name on the graft-dv table at $root")
       latest.withColumn("constraints", when(col("file") === Sentinel,
           map_filter(col("constraints"), (k, _) => k =!= name))
@@ -2613,8 +2537,8 @@ object DeletionVectors {
     * replays would silently discard all its data (the round-11 sink
     * bug); it applies and takes ownership of the high-water via
     * [[commitMovedFiles]]'s takeover reset. The same rule covers a
-    * high-water with NO recorded owner (batch [[applyCdcBatch]] calls,
-    * pre-round-12 manifests): a streaming query arriving over it is
+    * high-water with NO recorded owner (batch [[applyCdcBatch]] calls):
+    * a streaming query arriving over it is
     * still a new lineage, not a replay — the batch→stream handoff must
     * hand ownership over, never swallow the stream's restarted ids.
     * Only callers with no query id at all (batch tests, manual
@@ -2760,8 +2684,7 @@ object DeletionVectors {
   private[graft] def enforceConstraints(spark: SparkSession,
       root: String, rows: DataFrame): Unit = {
     val meta = currentMeta(spark, root)
-    enforceConstraintsWith(spark, root, rows,
-      meta.map(_.constraints).getOrElse(Map.empty), meta)
+    enforceConstraintsWith(spark, root, rows, meta.constraints, meta)
   }
 
   /** Enforcement core against an EXPLICIT constraint set + metadata —
@@ -2772,13 +2695,10 @@ object DeletionVectors {
     */
   private def enforceConstraintsWith(spark: SparkSession,
       root: String, rows: DataFrame, constraints: Map[String, String],
-      meta: Option[TableMeta]): Unit = {
+      meta: TableMeta): Unit = {
     if (constraints.isEmpty) return
-    val tableCols = meta.map(m =>
-      m.dataSchema.fields ++ m.partCols.map(c =>
-        org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.StringType))).getOrElse(Array.empty)
-    val withAll = tableCols.filterNot(fd => rows.columns.contains(fd.name))
+    val withAll = meta.fullSchema.fields
+      .filterNot(fd => rows.columns.contains(fd.name))
       .foldLeft(rows)((d, fd) =>
         // a column the batch doesn't carry evaluates as what READERS
         // will see: its exists-DEFAULT when declared, else NULL
@@ -2817,24 +2737,11 @@ object DeletionVectors {
     val incoming = org.apache.spark.sql.types.StructType(
       rows.schema.filterNot(fd => partCols.contains(fd.name)))
     val curMeta = currentMeta(spark, root)
-    val statsSchema = curMeta.map(_.statsSchema)
-      .getOrElse(new org.apache.spark.sql.types.StructType())
-    val mergedSchema = curMeta match {
-      case Some(m0) =>
-        require(m0.partCols == partCols,
-          s"graft-dv table at $root is partitioned by " +
-            s"${m0.partCols.mkString(",")}; append requested " +
-            partCols.mkString(","))
-        mergeSchemas(m0.dataSchema, incoming)
-      case None =>
-        // legacy manifest: derive the current schema from a live
-        // footer if any files exist, else adopt the batch's
-        val live = liveEntries(spark, root)
-        if (live.isEmpty) incoming
-        else mergeSchemas(org.apache.spark.sql.GraftDvApi.fileSchema(
-          spark, hfs(spark, live.head.path).getFileStatus(
-            GraftDvApi.pathOf(live.head.path))), incoming)
-    }
+    require(curMeta.partCols == partCols,
+      s"graft-dv table at $root is partitioned by " +
+        s"${curMeta.partCols.mkString(",")}; append requested " +
+        partCols.mkString(","))
+    val mergedSchema = mergeSchemas(curMeta.dataSchema, incoming)
 
     // CHECK constraints — enforced HERE because every mutating path
     // funnels through this gate (append, INSERT, upsert, CDC, DML
@@ -2846,7 +2753,7 @@ object DeletionVectors {
     // constraint set seen NOW is remembered so the CAS loop can detect
     // a constraint that committed while this write was in flight and
     // re-enforce before publishing (TOCTOU closure; see below).
-    val stagedCons = curMeta.map(_.constraints).getOrElse(Map.empty)
+    val stagedCons = curMeta.constraints
     enforceConstraintsWith(spark, root, rows, stagedCons, curMeta)
 
     val f = hfs(spark, root)
@@ -2859,7 +2766,7 @@ object DeletionVectors {
       .write.mode("overwrite").partitionBy(partCols: _*).parquet(stage)
     val newFiles = moveStaged(spark, root, stage, prefix)
     commitMovedFiles(spark, root, partCols, newFiles, mergedSchema,
-      statsSchema, stagedCons, cdcBatch, prefix, onBeforeCommit,
+      curMeta.statsSchema, stagedCons, cdcBatch, prefix, onBeforeCommit,
       onCommitted, extraFeatures)
   }
 
@@ -2881,18 +2788,15 @@ object DeletionVectors {
     // the staged files carry PHYSICAL field names — thread the live
     // column mapping into the synthesized meta so the stats scan (and
     // the constraint re-check below) binds renamed columns correctly
-    val curMap = currentMeta(spark, root)
-      .map(m => (m.colMap, m.droppedPhys))
-      .getOrElse((Map.empty[String, String], Seq.empty[String]))
-    def stageMeta = TableMeta(mergedSchema, partCols, statsSchema,
-      colMap = curMap._1, droppedPhys = curMap._2)
+    val cur = currentMeta(spark, root)
+    val stageMeta = TableMeta(mergedSchema, partCols, statsSchema,
+      colMap = cur.colMap, droppedPhys = cur.droppedPhys)
     val movedStats =
       if (newFiles.isEmpty) emptyStatsFrame(spark)
       else perFileStats(
         // manifest-fed relation, not parquet(strings): explicit path
         // strings re-encode escaped partition segments
-        relationOver(spark, root, entriesOf(spark, newFiles),
-          Some(stageMeta)),
+        relationOver(spark, root, entriesOf(spark, newFiles), stageMeta),
         statsSchema)
 
     // the streaming query id (set by StreamExecution on the micro-batch
@@ -2915,18 +2819,16 @@ object DeletionVectors {
     var casAttempts = 0
     while (!committed) {
       casAttempts = boundedCasRetry(root, casAttempts)
-      val base = Snapshots.latestVersion(spark, manifestTable(root)).get
-      val latest = Snapshots.readVersion(spark, manifestTable(root), base)
-      val prevStream =
-        if (latest.columns.contains("cdc_stream"))
-          latest.filter(col("file") === Sentinel).select("cdc_stream")
-            .collect().headOption.flatMap(r => Option(r.getString(0)))
-        else None
+      val base = latestV(spark, root)
+      val latest = ensureMetaCols(
+        Snapshots.readVersion(spark, manifestTable(root), base))
+      val prevStream = latest.filter(col("file") === Sentinel)
+        .select("cdc_stream").collect().headOption
+        .flatMap(r => Option(r.getString(0)))
       // a different stream id — OR an unowned high-water set by batch
-      // applies / a pre-round-12 manifest — means this stream is a new
-      // lineage: the high-water RESETS to this batch (greatest() would
-      // pin it at the previous writer's max and swallow the new
-      // stream's replays undetectably)
+      // applies — means this stream is a new lineage: the high-water
+      // RESETS to this batch (greatest() would pin it at the previous
+      // writer's max and swallow the new stream's replays undetectably)
       val takeover = qid.isDefined && !prevStream.exists(qid.contains)
       // a CHECK constraint that committed AFTER staging-time
       // enforcement (racing ALTER ADD CONSTRAINT) must gate THIS
@@ -2935,52 +2837,46 @@ object DeletionVectors {
       // (already on disk — no input recompute). Zero cost on the
       // no-race path: a map diff, no job.
       val baseMeta = metaAt(spark, root, base)
-      val unseenCons = baseMeta.map(_.constraints).getOrElse(Map.empty)
+      val unseenCons = baseMeta.constraints
         .filter { case (n, e) => !stagedCons.get(n).contains(e) }
       if (unseenCons.nonEmpty && newFiles.nonEmpty)
         enforceConstraintsWith(spark, root,
           toLogicalCols(relationOver(spark, root,
-            entriesOf(spark, newFiles), Some(stageMeta)),
-            Some(stageMeta)),
+            entriesOf(spark, newFiles), stageMeta), stageMeta),
           unseenCons, baseMeta)
       val cdc = cdcBatch.getOrElse(-1L)
       // re-merge against the REBASED base's sentinel: a rival append
       // may have widened the schema with columns ours never saw — a
       // plain overwrite would silently drop them from the log
-      val commitSchema = metaAt(spark, root, base).map(_.dataSchema)
-        .map(s => mergeSchemas(s, mergedSchema)).getOrElse(mergedSchema)
+      val commitSchema = mergeSchemas(baseMeta.dataSchema, mergedSchema)
       // append-side widening writes the new column's parquet field
       // under its own name — a name some DROPPED or RENAMED column
       // already used physically would make old files' stale bytes
       // resurface as the new column. Fail loudly; ALTER TABLE ADD
       // COLUMNS assigns a fresh physical name and is the right verb.
-      baseMeta.foreach { bm =>
-        val newCols = commitSchema.fieldNames
-          .filterNot(bm.dataSchema.fieldNames.contains)
-        val clash = newCols.filter(bm.usedPhysicalNames.contains)
-        require(clash.isEmpty,
-          s"append to $root would add column(s) ${clash.mkString(", ")} " +
-            "whose name a dropped/renamed column still occupies " +
-            "physically — use ALTER TABLE ADD COLUMNS (which assigns " +
-            "a fresh physical name) instead of append-side widening")
-      }
+      val clash = commitSchema.fieldNames
+        .filterNot(baseMeta.dataSchema.fieldNames.contains)
+        .filter(baseMeta.usedPhysicalNames.contains)
+      require(clash.isEmpty,
+        s"append to $root would add column(s) ${clash.mkString(", ")} " +
+          "whose name a dropped/renamed column still occupies " +
+          "physically — use ALTER TABLE ADD COLUMNS (which assigns " +
+          "a fresh physical name) instead of append-side widening")
       // reader-feature stamp rides the SAME flip as the rows that
       // need it (e.g. a CDF-update commit marks cdf-updates) — no
       // separate protocol version, nothing visible before the gate
       val withFeats: DataFrame => DataFrame = df =>
         if (extraFeatures.isEmpty) df
-        else withFeatures(df, baseMeta.map(_.features)
-          .getOrElse(Set.empty) ++ extraFeatures)
+        else withFeatures(df, baseMeta.features ++ extraFeatures)
       // row tracking: each appended file takes the next id range off
       // the sentinel watermark (deterministic: file-name order), and
       // the watermark advances ON the same flip. Rebased per CAS
       // attempt — a rival append's bump is honored, never overwritten.
-      val rtOn = baseMeta.exists(_.features.contains("row-tracking"))
+      val rtOn = baseMeta.features.contains("row-tracking")
       val (statsWithIds, newHigh) =
         if (!rtOn || newFiles.isEmpty) (movedStats, None)
         else {
-          val latestM = ensureMetaCols(latest)
-          val high = latestM.filter(col("file") === Sentinel)
+          val high = latest.filter(col("file") === Sentinel)
             .select(col("row_id_high")).collect().headOption
             .filter(!_.isNullAt(0)).map(_.getLong(0)).getOrElse(0L)
           val w = org.apache.spark.sql.expressions.Window
@@ -2992,7 +2888,7 @@ object DeletionVectors {
             Some(high + movedRowsTotal))
         }
       val next = withSentinelOp(
-        withFeats(ensureMetaCols(latest)).unionByName(ensureMetaCols(
+        withFeats(latest).unionByName(ensureMetaCols(
           statsWithIds.withColumn("cdc_batch", lit(cdc))))
         .withColumn("cdc_batch",
           if (takeover) lit(cdc) else greatest(col("cdc_batch"), lit(cdc)))
@@ -3030,17 +2926,14 @@ object DeletionVectors {
       op: String, onCommitted: Long => Unit = _ => (),
       extraFeatures: Set[String] = Set.empty): Seq[String] = {
     requireWriterFeatures(spark, root)
-    val partCols = partitionColsOf(spark, root)
+    val curMeta = currentMeta(spark, root)
+    val partCols = curMeta.partCols
     val incoming = org.apache.spark.sql.types.StructType(
       rowSchema.filterNot(fd => partCols.contains(fd.name)))
-    val curMeta = currentMeta(spark, root)
-    val statsSchema = curMeta.map(_.statsSchema)
-      .getOrElse(new org.apache.spark.sql.types.StructType())
-    val mergedSchema = curMeta.map(m => mergeSchemas(m.dataSchema, incoming))
-      .getOrElse(incoming)
+    val mergedSchema = mergeSchemas(curMeta.dataSchema, incoming)
     val newFiles = moveStaged(spark, root, stage, op)
     commitMovedFiles(spark, root, partCols, newFiles, mergedSchema,
-      statsSchema, Map.empty, None, op, () => (), onCommitted,
+      curMeta.statsSchema, Map.empty, None, op, () => (), onCommitted,
       extraFeatures)
   }
 
@@ -3149,16 +3042,11 @@ object DeletionVectors {
   def exists(spark: SparkSession, root: String): Boolean =
     Snapshots.latestVersion(spark, manifestTable(root)).isDefined
 
-  /** The table's partition columns (outermost first): from the
-    * manifest sentinel (survives an EMPTIED live set), falling back
-    * to the committed live set's hive paths for legacy manifests
-    * (empty for an empty legacy or unpartitioned table).
+  /** The table's partition columns (outermost first), from the
+    * manifest sentinel (survives an EMPTIED live set).
     */
   def partitionColsOf(spark: SparkSession, root: String): Seq[String] =
-    currentMeta(spark, root).map(_.partCols).getOrElse(
-      manifest(spark, root).select("file").limit(1).collect().headOption
-        .map(r => GraftDvApi.parsePartitions(r.getString(0)).map(_._1))
-        .getOrElse(Seq.empty))
+    currentMeta(spark, root).partCols
 
   // ---- skipping-index maintenance ---------------------------------------
 
@@ -3231,8 +3119,7 @@ object DeletionVectors {
     // PHYSICAL name the sidecar was built under (column mapping):
     // the hook refuses to probe if the marker column ever resolves to
     // a different physical field than the one indexed.
-    val physAtBuild = currentMeta(spark, root)
-      .map(_.physicalName(keyCol)).getOrElse(keyCol)
+    val physAtBuild = currentMeta(spark, root).physicalName(keyCol)
     val kf = hfs(spark, root).create(new Path(s"$it/_keycol"), true)
     try kf.write(s"$keyCol\n$physAtBuild".getBytes("UTF-8"))
     finally kf.close()
@@ -3290,11 +3177,10 @@ object DeletionVectors {
     indexKeyCol(spark, root) match {
       case None => false
       case Some(keyCol)
-          if currentMeta(spark, root).exists(m =>
-            !m.dataSchema.fieldNames.contains(keyCol)) =>
-        // marker names a column no longer in the schema (legacy table
-        // mutated before the requirePlainDataColumn guard) — never
-        // throw from a write path; skipping is simply disabled
+          if !currentMeta(spark, root).dataSchema.fieldNames
+            .contains(keyCol) =>
+        // marker names a column no longer in the schema — never throw
+        // from a write path; skipping is simply disabled
         false
       case Some(keyCol) =>
         val it = indexTable(root)
@@ -3329,21 +3215,20 @@ object DeletionVectors {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, Literal}
     import org.apache.spark.sql.types.LongType
     if (dataFilters.isEmpty) None
-    else indexKeyInfo(spark, root).filter { case (keyCol, physBuilt) =>
+    else indexKeyInfo(spark, root).flatMap { case (keyCol, physBuilt) =>
+      val m = currentMeta(spark, root)
       // the sidecar binds to the marker column BY NAME: if the column
       // left the schema, or now resolves to a DIFFERENT physical field
-      // than it was indexed under (DROP+re-ADD / rename machinery on a
-      // legacy table), probing would prune files with the WRONG
-      // column's bloom/min-max — refuse and fall back to the
-      // staleness-safe full candidate set
-      currentMeta(spark, root).forall { m =>
-        m.dataSchema.fieldNames.contains(keyCol) &&
-          physBuilt.forall(_ == m.physicalName(keyCol))
-      }
-    }.map(_._1).flatMap { keyCol =>
+      // than it was indexed under (DROP+re-ADD / rename machinery),
+      // probing would prune files with the WRONG column's
+      // bloom/min-max — refuse and fall back to the staleness-safe
+      // full candidate set
+      if (m.dataSchema.fieldNames.contains(keyCol) &&
+          physBuilt.forall(_ == m.physicalName(keyCol)))
+        Some(m.physicalName(keyCol))
+      else None
+    }.flatMap { physKey =>
       // scan-level attributes carry PHYSICAL names (column mapping)
-      val physKey = currentMeta(spark, root)
-        .map(_.physicalName(keyCol)).getOrElse(keyCol)
       def keysOf(e: org.apache.spark.sql.catalyst.expressions.Expression)
           : Seq[Long] = e match {
         case EqualTo(a: Attribute, Literal(v: Long, LongType))
@@ -3433,27 +3318,18 @@ object DeletionVectors {
       "format" -> "graft-dv",
       "location" -> root,
       "table_id" -> tableId(spark, root),
-      "partition_columns" ->
-        meta.map(_.partCols).getOrElse(partitionColsOf(spark, root))
-          .mkString(","),
-      "stats_columns" ->
-        meta.map(_.statsSchema.fieldNames.mkString(",")).getOrElse(""),
-      "constraints" ->
-        meta.map(_.constraints.toSeq.sortBy(_._1)
-          .map { case (n, e) => s"$n CHECK ($e)" }.mkString("; "))
-          .getOrElse(""),
+      "partition_columns" -> meta.partCols.mkString(","),
+      "stats_columns" -> meta.statsSchema.fieldNames.mkString(","),
+      "constraints" -> meta.constraints.toSeq.sortBy(_._1)
+        .map { case (n, e) => s"$n CHECK ($e)" }.mkString("; "),
       // mid-evolution state: the generations whose files may still be
       // live besides the current layout ("" once migration converges)
-      "old_layouts" ->
-        meta.map(_.oldLayouts.map(_.mkString("+")).mkString("; "))
-          .getOrElse(""),
+      "old_layouts" -> meta.oldLayouts.map(_.mkString("+")).mkString("; "),
       // column mapping (logical=physical pairs; "" = identity)
-      "column_mapping" ->
-        meta.map(_.colMap.toSeq.sorted
-          .map { case (l, p) => s"$l=$p" }.mkString(",")).getOrElse(""),
+      "column_mapping" -> meta.colMap.toSeq.sorted
+        .map { case (l, p) => s"$l=$p" }.mkString(","),
       // protocol: reader features this manifest REQUIRES
-      "features" ->
-        meta.map(_.features.toSeq.sorted.mkString(",")).getOrElse(""))
+      "features" -> meta.features.toSeq.sorted.mkString(","))
     val numbers = Map(
       "current_version" -> versions.last,
       "num_retained_versions" -> versions.size.toLong,

@@ -630,8 +630,8 @@ private[sources] class DvV1WriteBuilder(table: DvV2Table)
           val spark = data.sparkSession
           val partCols = DV.partitionColsOf(spark, table.root)
           require(partCols.nonEmpty,
-            s"graft-dv table at ${table.root} has an unrecoverable " +
-              "partition layout — re-create it")
+            s"cannot INSERT into graft-dv table at ${table.root}: it " +
+              "has no partition columns — re-create it partitioned")
           val written =
             if (overwrite || truncateFirst) {
               // materialize BEFORE init deletes the root: an

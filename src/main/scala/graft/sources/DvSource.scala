@@ -119,36 +119,9 @@ class DvSource extends RelationProvider with SchemaRelationProvider
     val spark = sqlContext.sparkSession
     val root = rootOf(parameters)
     val present = DeletionVectors.exists(spark, root)
-    def partCols: Seq[String] = {
-      val requested = parameters.get("partitionCol")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      val existing =
-        if (present && mode != SaveMode.Overwrite)
-          DeletionVectors.partitionColsOf(spark, root)
-        else Seq.empty
-      (requested, existing) match {
-        // an explicit option must MATCH an existing layout — a
-        // mismatched append would commit a mixed-layout manifest
-        // that bricks every later read ("the existing layout wins")
-        case (Some(r), e) if e.nonEmpty && r != e =>
-          throw new IllegalArgumentException(
-            s"graft-dv table at $root is partitioned by " +
-              s"${e.mkString(",")}; option(\"partitionCol\", " +
-              s"\"${r.mkString(",")}\") contradicts it — drop the " +
-              "option to append into the existing layout, or " +
-              "mode(\"overwrite\") to re-create")
-        case (Some(r), _) => r
-        case (None, e) if e.nonEmpty => e
-        case (None, _) =>
-          throw new IllegalArgumentException(
-            if (present)
-              s"graft-dv table at $root has an EMPTY live set, so " +
-                "its partition layout cannot be recovered from live " +
-                "paths — pass option(\"partitionCol\", ...) explicitly"
-            else "creating a graft-dv table requires " +
-              "option(\"partitionCol\", ...)")
-      }
-    }
+    def partCols: Seq[String] = DvSource.writeLayout(spark, root,
+      present && mode != SaveMode.Overwrite,
+      DvSource.partitionOption(parameters))
     mode match {
       case SaveMode.Overwrite =>
         DeletionVectors.init(spark, data, root, partCols): Unit
@@ -297,6 +270,36 @@ class DvSource extends RelationProvider with SchemaRelationProvider
   }
 }
 
+object DvSource {
+  /** The `partitionCol` option: a comma-separated layout, outermost
+    * first.
+    */
+  private[sources] def partitionOption(
+      parameters: Map[String, String]): Option[Seq[String]] =
+    parameters.get("partitionCol")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** The partition layout a V1 write (writer face, stream sink) lands
+    * under. The manifest sentinel's layout of an `existing` table wins,
+    * and a request that contradicts it fails — the append would commit
+    * a mixed-layout manifest. Creating a table takes the requested
+    * layout.
+    */
+  private[sources] def writeLayout(spark: SparkSession, root: String,
+      existing: Boolean, requested: Option[Seq[String]]): Seq[String] =
+    if (existing) {
+      val e = DeletionVectors.partitionColsOf(spark, root)
+      requested.filter(_ != e).foreach(r =>
+        throw new IllegalArgumentException(
+          s"graft-dv table at $root is partitioned by " +
+            s"${e.mkString(",")}; the write requested " +
+            s"${r.mkString(",")} — drop the request to append into " +
+            "the existing layout, or re-create the table"))
+      e
+    } else requested.getOrElse(throw new IllegalArgumentException(
+      "creating a graft-dv table requires option(\"partitionCol\", ...)"))
+}
+
 /** DSv1 streaming sink: per micro-batch, one CAS manifest flip
   * carrying the batch id — replays are structural no-ops. The first
   * batch CREATES the table (an empty init pins schema + layout, then
@@ -318,26 +321,9 @@ class DvStreamSink(spark: SparkSession, root: String,
     if (present && DeletionVectors.isStreamReplay(spark, root, batchId))
       return
     val batch = GraftPlanApi.asBatch(spark, data)
-    val partCols = {
-      val requested = parameters.get("partitionCol")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .orElse(if (partitionColumns.nonEmpty) Some(partitionColumns)
-          else None)
-      val existing =
-        if (present) DeletionVectors.partitionColsOf(spark, root)
-        else Seq.empty
-      (requested, existing) match {
-        case (Some(r), e) if e.nonEmpty && r != e =>
-          throw new IllegalArgumentException(
-            s"graft-dv table at $root is partitioned by " +
-              s"${e.mkString(",")}; the stream requested ${r.mkString(",")}")
-        case (Some(r), _) => r
-        case (None, e) if e.nonEmpty => e
-        case (None, _) => throw new IllegalArgumentException(
-          "creating a graft-dv table from a stream requires " +
-            "option(\"partitionCol\", ...)")
-      }
-    }
+    val partCols = DvSource.writeLayout(spark, root, present,
+      DvSource.partitionOption(parameters).orElse(
+        if (partitionColumns.nonEmpty) Some(partitionColumns) else None))
     if (!present)
       DeletionVectors.initEmpty(spark, root, batch.schema, partCols): Unit
     DeletionVectors.appendCommitted(spark, root, partCols, batch,
@@ -391,9 +377,9 @@ case class DvRelation(spark: SparkSession, root: String,
         "timestampAsOf) — write to the current table")
     val partCols = DeletionVectors.partitionColsOf(spark, root)
     require(partCols.nonEmpty,
-      s"cannot INSERT into graft-dv table at $root: its partition " +
-        "layout is unrecoverable (legacy manifest with an empty live " +
-        "set) — re-create via the writer face with partitionCol")
+      s"cannot INSERT into graft-dv table at $root: it has no " +
+        "partition columns — re-create it via the writer face with " +
+        "option(\"partitionCol\", ...)")
     if (overwrite)
       // materialize first: INSERT OVERWRITE t ... FROM t reads the
       // table init is about to delete

@@ -93,17 +93,6 @@ object GraftDvApi {
       }
   }
 
-  /** Data schema straight from one file's parquet footer — never
-    * resolve schema through string-path DataSource plumbing (it
-    * re-encodes escaped partition segments), and never from a
-    * directory listing (stale siblings may linger until vacuum).
-    */
-  def fileSchema(spark: SparkSession, status: FileStatus): StructType =
-    new ParquetFileFormat().inferSchema(
-      spark.asInstanceOf[classic.SparkSession], Map.empty, Seq(status))
-      .getOrElse(throw new IllegalStateException(
-        s"no parquet schema in ${status.getPath}"))
-
   /** The manifest IS the listing: no filesystem calls, partition
     * pruning evaluated against the manifest's own partition values.
     * Partition values are typed STRING deliberately — the manifest

@@ -165,4 +165,43 @@ class DvProtocolSpec extends SparkSpec {
         .withColumnRenamed("value", "amount")): Unit
     assert(DV.read(spark, root).count() == 205)
   }
+
+  test("the format gate: a manifest version whose sentinel lacks the " +
+      "table metadata is refused by reads, appends, SQL DELETE and " +
+      "ALTER, and the table is left untouched") {
+    spark.conf.set("spark.sql.catalog.graftdv",
+      "graft.sources.GraftDvCatalog")
+    val strips: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "schema_json dropped" -> (_.drop("schema_json")),
+      "schema_json null" ->
+        (_.withColumn("schema_json", lit(null).cast("string"))))
+    strips.foreach { case (what, strip) =>
+      val (root, ev) = fresh()
+      val mt = DV.manifestTable(root)
+      val stripped = strip(graft.operators.Snapshots.readLatest(spark, mt))
+        .localCheckpoint()
+      val bad = graft.operators.Snapshots.publish(spark, mt, stripped)
+      def refused(body: => Unit): Unit = {
+        val e = intercept[Exception](body)
+        def chain(t: Throwable): Boolean = t != null &&
+          (Option(t.getMessage).exists(
+            _.contains("unsupported manifest format")) || chain(t.getCause))
+        assert(chain(e), s"$what: not the format gate: ${e.getMessage}")
+      }
+      refused(DV.read(spark, root).count(): Unit)
+      refused(DV.append(spark, root, Seq("day"), ev.limit(5)): Unit)
+      refused(spark.sql(
+        s"DELETE FROM graftdv.`$root` WHERE user_id % 2 = 0").collect(): Unit)
+      refused(graft.GraftSql.sql(spark,
+        s"ALTER TABLE graftdv.`$root` ADD COLUMNS (zz BIGINT)").collect(): Unit)
+      // untouched: the stripped version is still the latest, and no
+      // stage dir or tombstone blob was left behind
+      assert(graft.operators.Snapshots.latestVersion(spark, mt)
+        .contains(bad), what)
+      val debris = new java.io.File(root).listFiles().map(_.getName)
+        .filter(n => n.startsWith("_") && n.contains("_stage"))
+      assert(debris.isEmpty, s"$what: stage debris ${debris.mkString(",")}")
+      assert(!graft.operators.DvBlobs.hasAny(root), s"$what: blob written")
+    }
+  }
 }
