@@ -747,130 +747,108 @@ object DeletionVectors {
 
   // ---- read path ----------------------------------------------------
 
+  /** Raw relation over `entries` in `meta`'s layout: PHYSICAL field
+    * names, no positions, no mask, `_metadata` resolvable — the input
+    * of per-file stats, the skipping index and constraint re-checks.
+    */
   private def relationOver(spark: SparkSession, root: String,
-      entries: Seq[GraftDvApi.LiveFile],
-      meta: TableMeta,
-      physExtra: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    // schema from the manifest sentinel (versioned with the live set —
-    // the schema-evolution carrier), mapped to the PHYSICAL field
-    // names the parquet files carry (renamed columns resolve by their
-    // frozen written name; [[toLogicalCols]] restores the logical
-    // names above the scan)
-    val dataSchema0 = meta.physicalSchema(meta.dataSchema)
-    // physExtra: physical columns OUTSIDE the logical schema (the
-    // row-tracking __row_id materialized into rewrite replacements) —
-    // files without them null-fill (the parquet missing-column rule)
-    val dataSchema =
-      if (physExtra.isEmpty) dataSchema0
-      else org.apache.spark.sql.types.StructType(
-        dataSchema0.fields ++ physExtra)
-    GraftDvApi.relation(spark, dataDir(root), meta.partCols,
-      entries, dataSchema)
-  }
+      entries: Seq[GraftDvApi.LiveFile], meta: TableMeta): DataFrame =
+    GraftDvApi.relation(spark, dataDir(root), meta.partCols, entries,
+      meta.physicalSchema(meta.dataSchema))
 
-  /** Scan of `entries` with physical position columns, tombstone mask
-    * applied. A never-deleted-from table gets NO mask filter at all
-    * (plan-time check), so the fast path is a bare parquet scan.
-    *
-    * PARTITION EVOLUTION: entries may span LAYOUT GENERATIONS (a
-    * file's layout is its hive path chain — the per-file record
-    * Iceberg keeps as a spec id, ours rides in the path). Mixed sets
-    * split into one manifest-fed relation PER LAYOUT — each with its
-    * own partition schema, so partition pruning works on every
-    * generation — and union by name under the table's full schema
-    * (an ex-partition column is a path value in old files and a data
-    * column in new ones; both surface identically). Single-layout
-    * sets (the common case, and every fully-migrated table) read
-    * through one relation.
-    */
-  private def scanWithPos(spark: SparkSession, root: String,
-      entries: Seq[GraftDvApi.LiveFile],
-      meta: TableMeta): DataFrame = {
-    val data = posScanUnmasked(spark, root, entries, meta)
-    if (DvBlobs.hasAny(root))
-      data.filter(GraftFunctions.dvAlive(spark,
-        col("__file"), col("__pos"), root))
-    else data
-  }
+  /** Where [[posScan]]'s files come from. */
+  private sealed trait FileSource
 
-  /** [[scanWithPos]] WITHOUT the tombstone mask — the shared
-    * generation-aware positional scan (one relation per partition
-    * layout, unioned under the full schema). The unmasked form exists
-    * for exactly one consumer class: coordinate-addressed reads of
-    * rows the current commit itself tombstoned
-    * ([[rowsAtCoordinates]]'s CDF pre-images), which the masked read
-    * can no longer serve.
-    */
-  private def posScanUnmasked(spark: SparkSession, root: String,
-      entries: Seq[GraftDvApi.LiveFile],
-      meta: TableMeta,
-      physExtra: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    val layouts = entries
-      .map(e => GraftDvApi.parsePartitions(e.path).map(_._1)).distinct
-    // a SINGLE-layout subset may still be an OLD generation (a
-    // migrate/CDF/constraint scan over old-layout files): reading
-    // it under the CURRENT meta would bind the path values to the
-    // wrong column (day=X served as event_type=X) and null the real
-    // path column — the dv_partition_evolution oracle caught exactly
-    // this. Trust the PARSED layout whenever it disagrees with meta.
-    val oldGeneration = layouts.size == 1 && layouts.head != meta.partCols
-    if (layouts.size <= 1 && !oldGeneration)
-      toLogicalCols(relationOver(spark, root, entries, meta, physExtra)
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index")), meta)
-    else {
-      val full = meta.fullSchema
-      val outCols = (full.fieldNames.toSeq ++
-        physExtra.map(_.name) :+ "__file" :+ "__pos").map(col)
-      val parts = entries
-        .groupBy(e => GraftDvApi.parsePartitions(e.path).map(_._1))
-        .toSeq.sortBy(_._1.mkString("\u0000"))
-        .map { case (layout, es) =>
-          val ds0 = meta.physicalSchema(org.apache.spark.sql.types.StructType(
-            full.filterNot(fd => layout.contains(fd.name))))
-          val ds = org.apache.spark.sql.types.StructType(
-            ds0.fields ++ physExtra)
-          toLogicalCols(
-            GraftDvApi.relation(spark, dataDir(root), layout, es, ds)
-              .withColumn("__file", col("_metadata.file_path"))
-              .withColumn("__pos", col("_metadata.row_index")), meta)
-            .select(outCols: _*)
-        }
-      parts.reduce(_ unionByName _)
-    }
-  }
-
-  private def withPosAndMask(spark: SparkSession, root: String,
-      data0: DataFrame): DataFrame = {
-    val data = data0
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
-    if (DvBlobs.hasAny(root))
-      data.filter(GraftFunctions.dvAlive(spark,
-        col("__file"), col("__pos"), root))
-    else data
-  }
-
-  /** The LAZY masked scan: the live-file set stays in the manifest
+  /** A committed manifest version, under THAT version's metadata,
+    * through the LAZY index: the live set stays in the manifest
     * parquet until the query's own partition/stats filters prune it
-    * ([[GraftDvApi.LazyManifestFileIndex]]) — the driver never
-    * materializes entries a pruned query doesn't touch.
+    * ([[GraftDvApi.LazyManifestFileIndex]]); an unfiltered execution
+    * serves the cached per-version entries.
     */
-  private def scanLazyWithPos(spark: SparkSession, root: String,
-      v: Long, meta: TableMeta): DataFrame =
-    toLogicalCols(withPosAndMask(spark, root, GraftDvApi.lazyRelation(
-      spark,
-      dataDir(root), s"${manifestTable(root)}/v=$v", meta.partCols,
-      meta.statsSchema, meta.physicalSchema(meta.dataSchema),
-      versionInfo(spark, root, v).liveBytes,
-      // unfiltered executions serve from the per-version entries
-      // cache instead of re-running a manifest job each time —
-      // pinned to THIS index's version (re-resolving latest here
-      // could serve a newer live set than the index's manifest)
-      Some(() => entriesAt(spark, root, v)), None,
-      Some(skippingHook(spark, root)))), meta)
+  private final case class AtVersion(v: Long) extends FileSource
+
+  /** An explicit entry list (rewrite victims, CDF steps, coordinates,
+    * index candidates, freshly moved files) under the caller's
+    * metadata, through the EAGER index.
+    */
+  private final case class Listed(entries: Seq[GraftDvApi.LiveFile],
+      meta: TableMeta) extends FileSource
+
+  /** THE positional scan: the table's columns plus `__file` / `__pos`
+    * (the physical coordinates tombstones address), with the tombstone
+    * mask unless `masked = false` (coordinate reads of rows the
+    * current commit itself tombstoned). A never-deleted-from table
+    * gets NO mask filter at all (plan-time check), so the fast path is
+    * a bare parquet scan. `physExtra`: physical columns OUTSIDE the
+    * logical schema (row tracking's materialized `__row_id`) — files
+    * without them null-fill (the parquet missing-column rule).
+    *
+    * PARTITION EVOLUTION: files may span LAYOUT GENERATIONS (a file's
+    * layout is its hive path chain — the per-file record Iceberg keeps
+    * as a spec id, ours rides in the path). Each generation reads
+    * through its own relation with its own partition schema, so
+    * partition pruning works on every generation, and the relations
+    * union by name under the table's full schema (an ex-partition
+    * column is a path value in old files and a data column in new
+    * ones; both surface identically). A version has one lazy index per
+    * `partCols +: oldLayouts`, scoped by its anchored path pattern when
+    * there is more than one; a listed set has one relation per PARSED
+    * layout — a single-layout subset may still be an OLD generation,
+    * and reading it under the current layout would bind path values
+    * to the wrong column (the dv_partition_evolution oracle caught
+    * exactly this).
+    */
+  private def posScan(spark: SparkSession, root: String,
+      src: FileSource, masked: Boolean = true,
+      physExtra: Seq[org.apache.spark.sql.types.StructField] = Nil)
+      : DataFrame = {
+    val meta = src match {
+      case AtVersion(v) => metaAt(spark, root, v)
+      case Listed(_, m) => m
+    }
+    val full = meta.fullSchema
+    def dataSchema(layout: Seq[String]) =
+      org.apache.spark.sql.types.StructType(meta.physicalSchema(
+        org.apache.spark.sql.types.StructType(
+          full.filterNot(fd => layout.contains(fd.name)))).fields ++
+        physExtra)
+    val gens: Seq[(Seq[String], DataFrame)] = src match {
+      case AtVersion(v) =>
+        val layouts = (meta.partCols +: meta.oldLayouts).distinct
+        val bytes = versionInfo(spark, root, v).liveBytes
+        layouts.map(l => l -> GraftDvApi.lazyRelation(spark,
+          dataDir(root), s"${manifestTable(root)}/v=$v", l,
+          meta.statsSchema, dataSchema(l), bytes,
+          // pinned to THIS index's version (re-resolving latest here
+          // could serve a newer live set than the index's manifest)
+          Some(() => entriesAt(spark, root, v)),
+          if (layouts.size > 1) Some(layoutRegex(spark, root, l))
+          else None,
+          Some(skippingHook(spark, root))))
+      case Listed(entries, _) =>
+        val byLayout = entries
+          .groupBy(e => GraftDvApi.parsePartitions(e.path).map(_._1))
+          .toSeq.sortBy(_._1.mkString("\u0000"))
+        (if (byLayout.isEmpty) Seq(meta.partCols -> entries) else byLayout)
+          .map { case (l, es) => l -> GraftDvApi.relation(spark,
+            dataDir(root), l, es, dataSchema(l)) }
+    }
+    val withPos = gens.map { case (l, rel) => l -> rel
+      .withColumn("__file", col("_metadata.file_path"))
+      .withColumn("__pos", col("_metadata.row_index")) }
+    val data = withPos match {
+      case Seq((l, one)) if l == meta.partCols => one
+      case many =>
+        val out = (meta.physicalSchema(full).fieldNames.toSeq ++
+          physExtra.map(_.name) :+ "__file" :+ "__pos").map(col)
+        many.map(_._2.select(out: _*)).reduce(_ unionByName _)
+    }
+    toLogicalCols(
+      if (masked && DvBlobs.hasAny(root))
+        data.filter(GraftFunctions.dvAlive(spark,
+          col("__file"), col("__pos"), root))
+      else data, meta)
+  }
 
   /** Anchored hive-chain pattern matching exactly the files of one
     * partition-layout generation — pushed into the manifest scan so
@@ -890,82 +868,57 @@ object DeletionVectors {
       "/[^/]*$"
   }
 
-  /** Mid-evolution LAZY read: one manifest-fed lazy index PER layout
-    * generation (each scoped by its anchored path pattern, each with
-    * its own partition pruning), unioned under the full schema — the
-    * driver still materializes only filter-surviving entries, so the
-    * round-11 lazy-manifest ceiling removal SURVIVES the evolution
-    * window instead of waiting for migration to converge.
-    */
-  private def scanLazyMixedWithPos(spark: SparkSession, root: String,
-      v: Long, meta: TableMeta): DataFrame = {
-    val full = meta.fullSchema
-    val outCols = (full.fieldNames.toSeq :+ "__file" :+ "__pos").map(col)
-    val bytes = versionInfo(spark, root, v).liveBytes
-    val gens = (meta.partCols +: meta.oldLayouts).distinct
-    val parts = gens.map { layout =>
-      val ds = meta.physicalSchema(org.apache.spark.sql.types.StructType(
-        full.filterNot(fd => layout.contains(fd.name))))
-      toLogicalCols(GraftDvApi.lazyRelation(spark, dataDir(root),
-          s"${manifestTable(root)}/v=$v", layout, meta.statsSchema,
-          ds, bytes, Some(() => entriesAt(spark, root, v)),
-          Some(layoutRegex(spark, root, layout)),
-          Some(skippingHook(spark, root)))
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index")), meta)
-        .select(outCols: _*)
-    }
-    val data = parts.reduce(_ unionByName _)
-    if (DvBlobs.hasAny(root))
-      data.filter(GraftFunctions.dvAlive(spark,
-        col("__file"), col("__pos"), root))
-    else data
-  }
-
-  /** The table as readers see it: committed files minus tombstones.
-    * A table whose purge removed EVERY file from the manifest (all
-    * rows deleted) is still readable — schema comes from the manifest
-    * sentinel.
+  /** The table as readers see it: the latest committed version,
+    * masked.
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    readPos0(spark, root).drop("__file", "__pos")
+    readVersion(spark, root, latestV(spark, root))
 
-  /** Shared masked positional read: the lazy manifest-resolved scan
-    * (no driver entry materialization until the query's filters prune
-    * the manifest). A mid-evolution table (old-layout files possibly
-    * live) reads through one LAZY index per layout generation —
-    * pruning and driver holdings stay per-generation even before
-    * migration converges (which clears the flag and collapses to one
-    * index).
+  /** Typed empty frame: `meta`'s full schema (partition values typed
+    * string, matching the file index's partition typing).
     */
-  private def readPos0(spark: SparkSession, root: String): DataFrame = {
-    val v = latestV(spark, root)
-    val m = metaAt(spark, root, v)
-    if (m.oldLayouts.nonEmpty) scanLazyMixedWithPos(spark, root, v, m)
-    else scanLazyWithPos(spark, root, v, m)
-  }
-
-  /** Typed empty frame for an emptied live set: schema from the
-    * manifest sentinel (partition values read back as string, matching
-    * the file index's partition typing).
-    */
-  private def emptyTable(spark: SparkSession, root: String): DataFrame =
+  private def emptyTable(spark: SparkSession, meta: TableMeta): DataFrame =
     spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      currentMeta(spark, root).fullSchema)
+      new java.util.ArrayList[org.apache.spark.sql.Row](), meta.fullSchema)
 
-  /** The table as of committed manifest version `v`, masked — read
-    * under THAT version's recorded schema (time travel across schema
-    * evolution shows each version's own column set; tombstones stay
-    * retroactively current per the pinned semantics).
+  /** The table as of committed manifest version `v`, masked — the same
+    * lazy per-version scan as the latest read, under THAT version's
+    * recorded metadata: time travel across schema evolution shows each
+    * version's own column set, a mid-evolution version reads one index
+    * per layout generation, and an emptied version is an empty scan
+    * typed by its own schema. Tombstones stay retroactively current
+    * per the pinned semantics.
     */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val files = manifestAt(spark, root, v).select("file")
-      .collect().map(_.getString(0)).toSeq
-    if (files.isEmpty) emptyTable(spark, root)
-    else scanWithPos(spark, root, entriesOf(spark, files),
-      metaAt(spark, root, v)).drop("__file", "__pos")
+  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
+    posScan(spark, root, AtVersion(v)).drop("__file", "__pos")
+
+  /** The one time-travel resolver — SQL `VERSION/TIMESTAMP AS OF`, the
+    * `versionAsOf`/`timestampAsOf` reader options and RESTORE: a
+    * version must be committed (and still in the log); a timestamp
+    * resolves to the highest version committed at or before it (the
+    * commit marker's instant, [[Snapshots.versionAsOf]]).
+    */
+  def timeTravelVersion(spark: SparkSession, root: String,
+      asOf: Either[Long, java.sql.Timestamp]): Long = {
+    val mt = manifestTable(root)
+    asOf match {
+      case Left(v) =>
+        require(Snapshots.committedVersions(spark, mt).contains(v),
+          s"version $v of $root was never committed (or was vacuumed)")
+        v
+      case Right(ts) =>
+        Snapshots.versionAsOf(spark, mt, ts.getTime).getOrElse(
+          throw new IllegalArgumentException(
+            s"no committed version of $root at or before $ts"))
+    }
   }
+
+  /** A time-travel timestamp literal; `clause` names what took it. */
+  def asOfTimestamp(clause: String, t: String): java.sql.Timestamp =
+    try java.sql.Timestamp.valueOf(t)
+    catch { case _: IllegalArgumentException =>
+      throw new IllegalArgumentException(
+        s"$clause takes 'yyyy-mm-dd hh:mm:ss[.f]'; got '$t'") }
 
   /** CHANGE DATA FEED (batch face): row-level changes between two
     * committed manifest versions, as the table's columns plus
@@ -1019,8 +972,8 @@ object DeletionVectors {
       val meta = metaAt(spark, root, b)
       def rd(files: Set[String]): Option[DataFrame] =
         if (files.isEmpty) None
-        else Some(scanWithPos(spark, root,
-          entriesOf(spark, files.toSeq.sorted), meta)
+        else Some(posScan(spark, root,
+          Listed(entriesOf(spark, files.toSeq.sorted), meta))
           .drop("__file", "__pos"))
       def tag(df: DataFrame, t: String): DataFrame =
         df.withColumn("_change_type", lit(t))
@@ -1075,7 +1028,7 @@ object DeletionVectors {
     }.toSeq
     steps.reduceOption(
         _.unionByName(_, allowMissingColumns = true))
-      .getOrElse(emptyTable(spark, root)
+      .getOrElse(emptyTable(spark, metaAt(spark, root, toV))
         .withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L))
         .withColumn("_commit_timestamp",
@@ -1165,17 +1118,17 @@ object DeletionVectors {
     v
   }
 
-  /** Masked read restricted to an explicit file subset — the hook
-    * that lets file-skipping indexes compose with a DV table (the
-    * index prunes to candidate files, this applies the tombstone mask
-    * to exactly those) and that serves historical manifests (dead
-    * files readable until vacuum, current tombstones applied
-    * RETROACTIVELY per the pinned time-travel semantics).
+  /** Masked read restricted to an explicit file subset under the
+    * current schema — the hook that lets file-skipping indexes compose
+    * with a DV table (the index prunes to candidate files, this
+    * applies the tombstone mask to exactly those). Time travel does
+    * not come through here: [[readVersion]] reads a version's own
+    * manifest and metadata.
     */
   def readFiles(spark: SparkSession, root: String,
       files: Seq[String]): DataFrame =
-    scanWithPos(spark, root, entriesOf(spark, files),
-      currentMeta(spark, root))
+    posScan(spark, root,
+      Listed(entriesOf(spark, files), currentMeta(spark, root)))
       .drop("__file", "__pos")
 
   // ---- row tracking (round 14) ---------------------------------------
@@ -1250,8 +1203,8 @@ object DeletionVectors {
     require(rowTrackingOn(spark, root),
       s"row tracking is not enabled on the graft-dv table at $root " +
         "(DV.enableRowTracking)")
-    posScanRowId(spark, root, liveEntries(spark, root),
-      currentMeta(spark, root)).drop("__file", "__pos")
+    posScanRowId(spark, root, AtVersion(latestV(spark, root)))
+      .drop("__file", "__pos")
   }
 
   /** Masked positional scan with `__row_id` resolved (materialized
@@ -1259,22 +1212,12 @@ object DeletionVectors {
     * [[readWithRowId]] and every id-preserving rewrite staging.
     */
   private def posScanRowId(spark: SparkSession, root: String,
-      entries: Seq[GraftDvApi.LiveFile],
-      meta: TableMeta): DataFrame = {
-    if (entries.isEmpty)
-      return scanWithPos(spark, root, entries, meta)
-        .withColumn("__row_id", lit(null).cast("long"))
-    val raw = posScanUnmasked(spark, root, entries, meta,
-      physExtra = Seq(RowIdField))
-    val masked =
-      if (DvBlobs.hasAny(root))
-        raw.filter(GraftFunctions.dvAlive(spark,
-          col("__file"), col("__pos"), root))
-      else raw
+      src: FileSource): DataFrame = {
     val bases = ensureMetaCols(manifestFull(spark, root))
       .filter(col("file") =!= Sentinel)
       .select(col("file").as("__file"), col("base_row_id"))
-    masked.join(bases, Seq("__file"), "left")
+    posScan(spark, root, src, physExtra = Seq(RowIdField))
+      .join(bases, Seq("__file"), "left")
       .withColumn("__row_id",
         coalesce(col("__row_id"), col("base_row_id") + col("__pos")))
       .drop("base_row_id")
@@ -1288,19 +1231,21 @@ object DeletionVectors {
     */
   private def rewriteSource(spark: SparkSession, root: String,
       entries: Seq[GraftDvApi.LiveFile],
-      meta: TableMeta): DataFrame =
-    if (meta.features.contains("row-tracking"))
-      posScanRowId(spark, root, entries, meta).drop("__file", "__pos")
-    else
-      scanWithPos(spark, root, entries, meta).drop("__file", "__pos")
+      meta: TableMeta): DataFrame = {
+    val src = Listed(entries, meta)
+    (if (meta.features.contains("row-tracking"))
+      posScanRowId(spark, root, src)
+    else posScan(spark, root, src)).drop("__file", "__pos")
+  }
 
-  /** Masked positional scan — the table's columns plus `__file` /
-    * `__pos` (the physical coordinates tombstones address) — what the
-    * DSv2 row-level operations scan; an empty live set yields an
-    * empty frame with the same shape.
+  /** Masked positional scan of the latest version — the table's
+    * columns plus `__file` / `__pos` — what the DSv2 row-level
+    * operations scan; an empty live set yields an empty frame with the
+    * same shape.
     */
   private[graft] def readWithPos(spark: SparkSession,
-      root: String): DataFrame = readPos0(spark, root)
+      root: String): DataFrame =
+    posScan(spark, root, AtVersion(latestV(spark, root)))
 
   /** UNMASKED scan of the live set with `_metadata` columns available
     * — the input for sidecar builds (e.g. the skipping index, which
@@ -1427,8 +1372,8 @@ object DeletionVectors {
       require(attempts <= 10, "delete/purge conflict retries exhausted")
       val entries = liveEntries(spark, root)
       if (entries.isEmpty) return math.max(firstPass, 0L)
-      val marked = mark(
-          scanWithPos(spark, root, entries, currentMeta(spark, root)))
+      val marked = mark(posScan(spark, root,
+          Listed(entries, currentMeta(spark, root))))
         .select(col("__file"), col("__pos"))
       val (nMarked, touched) = writeMarks(spark, root, marked, entries.size)
       if (firstPass < 0) firstPass = nMarked
@@ -2103,7 +2048,7 @@ object DeletionVectors {
     * chain — the per-file spec record); new writes land under the
     * new one; the read path unions one manifest-fed relation per
     * layout generation so partition pruning works on each
-    * ([[scanWithPos]]). A column leaving the layout joins the data
+    * ([[posScan]]). A column leaving the layout joins the data
     * schema as STRING (its values only ever existed as path
     * strings); a column entering it must already be a STRING column
     * of the full schema. [[migrateLayout]] (SQL: `OPTIMIZE ...
@@ -2241,7 +2186,7 @@ object DeletionVectors {
         val added = entriesAt(spark, root, base)
           .filterNot(e => seen.contains(e.path))
         if (added.nonEmpty)
-          assertHolds(scanWithPos(spark, root, added, baseMeta)
+          assertHolds(posScan(spark, root, Listed(added, baseMeta))
             .drop("__file", "__pos"))
         validatedV = base
       }
@@ -2943,20 +2888,19 @@ object DeletionVectors {
     * recorded, so the masked read can no longer serve them; the
     * files themselves are immutable and present until vacuum). Cost:
     * a scan of the COORDINATES' files semi-joined on position —
-    * O(touched files), never the table. The scan is the
-    * generation-aware [[posScanUnmasked]]: on a mid-evolution table
-    * the coordinate set may span partition-layout generations (or be
-    * entirely old-generation), and binding old files under the
-    * CURRENT layout would serve path values as the wrong column —
-    * the same mis-binding [[scanWithPos]] splits per layout to avoid.
+    * O(touched files), never the table. The scan is the unmasked,
+    * generation-aware [[posScan]]: on a mid-evolution table the
+    * coordinate set may span partition-layout generations (or be
+    * entirely old-generation).
     */
   private[graft] def rowsAtCoordinates(spark: SparkSession,
       root: String, coords: DataFrame): DataFrame = {
     val files = coords.select(col("file")).distinct()
       .collect().map(_.getString(0)).toSeq
-    if (files.isEmpty) return emptyTable(spark, root)
-    val scan = posScanUnmasked(spark, root, entriesOf(spark, files),
-      currentMeta(spark, root))
+    val meta = currentMeta(spark, root)
+    if (files.isEmpty) return emptyTable(spark, meta)
+    val scan = posScan(spark, root,
+      Listed(entriesOf(spark, files), meta), masked = false)
     // no broadcast hint: coordinates are O(updated rows) — AQE keeps
     // the broadcast while small and shuffles past the threshold
     scan.join(coords

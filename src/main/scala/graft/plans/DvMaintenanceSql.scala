@@ -424,20 +424,8 @@ case class DvRestoreCommand(identText: String,
 
   override def run(session: SparkSession): Seq[Row] = {
     val root = DvMaintenanceSql.rootOf(session, identText)
-    val v = target match {
-      case Left(n) => n
-      case Right(ts) =>
-        val at =
-          try java.sql.Timestamp.valueOf(ts).getTime
-          catch { case _: IllegalArgumentException =>
-            throw new IllegalArgumentException(
-              s"RESTORE ... TO TIMESTAMP AS OF takes " +
-                s"'yyyy-mm-dd hh:mm:ss[.f]'; got '$ts'") }
-        graft.operators.Snapshots.versionAsOf(session,
-          DV.manifestTable(root), at).getOrElse(
-          throw new IllegalArgumentException(
-            s"no committed version of $identText at or before $ts"))
-    }
+    val v = DV.timeTravelVersion(session, root, target.map(ts =>
+      DV.asOfTimestamp("RESTORE ... TO TIMESTAMP AS OF", ts)))
     val nv = DV.restore(session, root, v)
     Seq(Row(v, nv))
   }

@@ -159,10 +159,7 @@ class GraftDvCatalog extends TableCatalog {
         s"graft-dv VERSION AS OF takes a manifest version number; " +
           s"got '$version'")
     }
-    require(Snapshots.committedVersions(spark,
-        DV.manifestTable(root)).contains(v),
-      s"version $v of $root was never committed (or was vacuumed)")
-    new DvV2Table(root, Some(v))
+    new DvV2Table(root, Some(DV.timeTravelVersion(spark, root, Left(v))))
   }
 
   /** `TIMESTAMP AS OF t` (micros since epoch) — highest version whose
@@ -171,12 +168,8 @@ class GraftDvCatalog extends TableCatalog {
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val root = rootOf(ident)
     if (!DV.exists(spark, root)) throw new NoSuchTableException(ident)
-    val at = timestamp / 1000L
-    val v = Snapshots.versionAsOf(spark, DV.manifestTable(root), at)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed version of $root at or before " +
-          s"${new java.sql.Timestamp(at)}"))
-    new DvV2Table(root, Some(v))
+    new DvV2Table(root, Some(DV.timeTravelVersion(spark, root,
+      Right(new java.sql.Timestamp(timestamp / 1000L)))))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

@@ -57,17 +57,10 @@ class DvSource extends RelationProvider with SchemaRelationProvider
     val ts = parameters.get("timestampAsOf")
     require(v.isEmpty || ts.isEmpty,
       "pass versionAsOf OR timestampAsOf, not both")
-    v.map(_.toLong).orElse(ts.map { t =>
-      val at =
-        try java.sql.Timestamp.valueOf(t).getTime
-        catch { case _: IllegalArgumentException =>
-          throw new IllegalArgumentException(
-            s"timestampAsOf takes 'yyyy-mm-dd hh:mm:ss[.f]'; got '$t'") }
-      Snapshots.versionAsOf(spark,
-        DeletionVectors.manifestTable(root), at).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed version of $root at or before $t"))
-    })
+    v.map(n => Left(n.toLong): Either[Long, java.sql.Timestamp])
+      .orElse(ts.map(t =>
+        Right(DeletionVectors.asOfTimestamp("timestampAsOf", t))))
+      .map(DeletionVectors.timeTravelVersion(spark, root, _))
   }
 
   override def createRelation(sqlContext: SQLContext,

@@ -212,4 +212,37 @@ class DvEvolveSpec extends SparkSpec {
     assert(DV.history(spark, root)
       .filter(col("operation") === "migrate").count() >= 2)
   }
+
+  test("time travel to a mid-evolution version reads each layout " +
+      "generation, before and after migration converges") {
+    val (root, _, ev) = fresh()
+    DV.setPartitioning(spark, root, Seq("event_type"))
+    DV.append(spark, root, Seq("event_type"), ev.limit(70)
+      .withColumn("event_id", col("event_id") + 9000000L))
+    val vMid = Snapshots.latestVersion(spark, DV.manifestTable(root)).get
+    val cols = DV.read(spark, root).columns.toSeq.map(col)
+    val recorded = DV.read(spark, root).select(cols: _*).localCheckpoint()
+    assert(recorded.count() == 470)
+    def same(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+    var rounds = 0
+    while (DV.migrateLayout(spark, root).nonEmpty) {
+      rounds += 1
+      assert(rounds < 5, "migration must converge")
+    }
+    assert(DV.manifest(spark, root).collect().map(_.getString(0))
+      .forall(!_.contains("/day=")), "no old-layout file may stay live")
+    // no delete after vMid: tombstones would apply retroactively
+    val back = DV.readVersion(spark, root, vMid).select(cols: _*)
+    assert(same(back, recorded))
+    // day is a path value in the old generation and a data column in
+    // the new one; event_type the reverse
+    val d = ev.select("day").orderBy("day").head().getString(0)
+    assert(same(back.filter(col("day") === d),
+      recorded.filter(col("day") === d)))
+    val t = ev.select("event_type").orderBy("event_type").head().getString(0)
+    assert(same(back.filter(col("event_type") === t),
+      recorded.filter(col("event_type") === t)))
+  }
 }

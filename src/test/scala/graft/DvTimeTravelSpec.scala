@@ -116,4 +116,32 @@ class DvTimeTravelSpec extends SparkSpec {
     }
     assert(native.getMessage.toLowerCase.contains("time travel"))
   }
+
+  test("an emptied version reads under its OWN schema: readVersion, " +
+      "VERSION AS OF and the empty change feed ignore later columns") {
+    val root = Files.createTempDirectory("graft_dvtt").toString
+    val ev = graft.sources.Tables.events(spark, sf)
+      .orderBy("event_id").limit(50)
+      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+      .localCheckpoint()
+    DV.init(spark, ev, root, "day")
+    DV.delete(spark, root, "event_id", ev.select("event_id"))
+    DV.purge(spark, root, "day", 0.0)
+    val mt = DV.manifestTable(root)
+    assert(Snapshots.latestVersion(spark, mt).contains(2L))
+    assert(DV.manifest(spark, root).count() == 0,
+      "v2 must hold no live file")
+    graft.plans.GraftPlans.ensureDvCatalog(spark)
+    spark.sql(s"ALTER TABLE graftdv.`$root` ADD COLUMNS (zz STRING)")
+    assert(DV.read(spark, root).columns.contains("zz"))
+
+    val byApi = DV.readVersion(spark, root, 2L)
+    val bySql = spark.sql(s"SELECT * FROM graftdv.`$root` VERSION AS OF 2")
+    val feed = DV.readChanges(spark, root, 2L, 2L)
+    Seq(byApi, bySql, feed).foreach { df =>
+      assert(!df.columns.contains("zz"), df.columns.mkString(", "))
+      assert(df.count() == 0)
+    }
+    assert(byApi.columns.toSeq == DV.readVersion(spark, root, 1L).columns.toSeq)
+  }
 }
